@@ -66,9 +66,11 @@ object TimeWindows {
 
     // Session windows, 30-minute gap, per user (oracle: classic
     // lag-gap + cumulative-sum sessionization; session end = last event
-    // + gap). Empirically verified (tools.GapProbe): session_window
-    // MERGES a pair exactly `gap` apart — the session interval is
-    // closed at last+gap — so the oracle splits strictly on gap > 1800.
+    // + gap). session_window MERGES a pair exactly `gap` apart — the
+    // session interval is closed at last+gap — so the oracle splits
+    // strictly on gap > 1800. StreamingSpec "session windows merge
+    // events within the gap and split across it" pins this: gaps of
+    // 1,799 and 1,800 s give one session, 1,801 s gives two.
     Q("q_session_batch",
       """WITH e AS (SELECT user_id, CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS es
         |           FROM events),

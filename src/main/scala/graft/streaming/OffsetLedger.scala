@@ -44,33 +44,11 @@ object OffsetLedger {
     * replay-overwrite recovery from a fresh process. */
   private[graft] def sinkImpl(outDir: String, ledgerDir: String,
                               haltAfterDataForEpoch: Option[Long])
-                             (df: DataFrame, epochId: Long): Unit = {
-    Files.createDirectories(Paths.get(ledgerDir))
-    val marker = ledgerRowPath(ledgerDir, epochId)
-    if (Files.exists(marker)) return // replayed epoch: already committed, skip
-    val cached = df.cache()
-    try {
-      val stats = cached.agg(
-        count(lit(1)).cast("long"),
-        coalesce(max(col("event_id")), lit(-1L)),
-        coalesce(min(col("event_id")), lit(-1L))).head()
-      // data first (epoch-keyed, overwrite = replay-safe) ...
-      cached.write.mode(SaveMode.Overwrite).parquet(s"$outDir/epoch=$epochId")
-      if (haltAfterDataForEpoch.contains(epochId))
-        Runtime.getRuntime.halt(137) // simulated kill -9 mid-epoch
-      // ... ledger commit last. Files.write(marker, …) would create the
-      // file before filling it — a crash mid-write leaves a truncated
-      // marker that replay treats as committed. Write to a temp file in
-      // the same directory and ATOMIC_MOVE it into place, so the marker
-      // only ever exists fully written.
-      val entry =
-        s"""{"epoch_id":$epochId,"n_rows":${stats.getLong(0)},""" +
-          s""""max_event_id":${stats.getLong(1)},"min_event_id":${stats.getLong(2)}}"""
-      val tmp = Files.createTempFile(Paths.get(ledgerDir), s".epoch_$epochId", ".tmp")
-      Files.write(tmp, entry.getBytes("UTF-8"))
-      Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
-    } finally cached.unpersist()
-  }
+                             (df: DataFrame, epochId: Long): Unit =
+    commitEpoch(ledgerDir, haltAfterDataForEpoch, df, epochId, "event_id") {
+      // epoch-keyed OVERWRITE: a replay rewrites the same directory
+      _.write.mode(SaveMode.Overwrite).parquet(s"$outDir/epoch=$epochId")
+    }
 
   /** foreachBatch body for the graft-kv 2PC sink — the exactly-once
     * recipe when the epoch store is the custom DSv2 table rather than
@@ -102,37 +80,56 @@ object OffsetLedger {
   private[graft] def kvSinkImpl(outDir: String, ledgerDir: String,
                                 haltAfterDataForEpoch: Option[Long])
                                (df: DataFrame, epochId: Long): Unit = {
+    val epochPath = Paths.get(outDir, s"epoch=$epochId")
+    commitEpoch(ledgerDir, haltAfterDataForEpoch, df, epochId, "key") { cached =>
+      if (Files.isDirectory(epochPath)) { // uncommitted remnant of a crashed attempt
+        // _SUCCESS goes FIRST: the reverse-path walk below deletes
+        // `part-*` before `_SUCCESS` ('p' sorts after '_'), so a reader
+        // polling the manifest mid-replay could observe _SUCCESS listing
+        // already-deleted part files — a transient breach of "readers of
+        // the manifest never see a half-written epoch". Removing the
+        // manifest makes the epoch invisible to manifest-gated readers
+        // before any data file disappears.
+        Files.deleteIfExists(epochPath.resolve("_SUCCESS"))
+        // Files.walk holds open directory handles — close it, or a job
+        // cycling through crash-replays (this sink's whole purpose)
+        // leaks fds until GC
+        val walk = Files.walk(epochPath)
+        try walk.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => Files.delete(p))
+        finally walk.close()
+      }
+      cached.write.format("graft-kv")
+        .option("path", epochPath.toString).mode(SaveMode.Append).save()
+    }
+  }
+
+  /** The epoch commit both sinks share, in this order: skip an epoch
+    * whose marker exists (a replay of a committed epoch), take the
+    * epoch's row count and `idCol` max/min, run `writeData` (which must
+    * be replay-safe), fire the crash-window halt hook, and commit the
+    * ledger marker last. */
+  private def commitEpoch(ledgerDir: String, haltAfterDataForEpoch: Option[Long],
+                          df: DataFrame, epochId: Long, idCol: String)
+                         (writeData: DataFrame => Unit): Unit = {
     Files.createDirectories(Paths.get(ledgerDir))
     val marker = ledgerRowPath(ledgerDir, epochId)
-    if (Files.exists(marker)) return // replayed epoch: already committed
-    val epochPath = Paths.get(outDir, s"epoch=$epochId")
-    if (Files.isDirectory(epochPath)) { // uncommitted remnant of a crashed attempt
-      // _SUCCESS goes FIRST: the reverse-path walk below deletes
-      // `part-*` before `_SUCCESS` ('p' sorts after '_'), so a reader
-      // polling the manifest mid-replay could observe _SUCCESS listing
-      // already-deleted part files — a transient breach of "readers of
-      // the manifest never see a half-written epoch". Removing the
-      // manifest makes the epoch invisible to manifest-gated readers
-      // before any data file disappears (r12 advice).
-      Files.deleteIfExists(epochPath.resolve("_SUCCESS"))
-      // Files.walk holds open directory handles — close it, or a job
-      // cycling through crash-replays (this sink's whole purpose)
-      // leaks fds until GC (r12 review)
-      val walk = Files.walk(epochPath)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    if (Files.exists(marker)) return // replayed epoch: already committed, skip
     val cached = df.cache()
     try {
       val stats = cached.agg(
         count(lit(1)).cast("long"),
-        coalesce(max(col("key")), lit(-1L)),
-        coalesce(min(col("key")), lit(-1L))).head()
-      cached.write.format("graft-kv")
-        .option("path", epochPath.toString).mode(SaveMode.Append).save()
+        coalesce(max(col(idCol)), lit(-1L)),
+        coalesce(min(col(idCol)), lit(-1L))).head()
+      // data first ...
+      writeData(cached)
       if (haltAfterDataForEpoch.contains(epochId))
-        Runtime.getRuntime.halt(137) // simulated kill -9 in the 2PC-commit→marker window
+        Runtime.getRuntime.halt(137) // simulated kill -9 in the data→marker window
+      // ... ledger commit last. Files.write(marker, …) would create the
+      // file before filling it — a crash mid-write leaves a truncated
+      // marker that replay treats as committed. Write to a temp file in
+      // the same directory and ATOMIC_MOVE it into place, so the marker
+      // only ever exists fully written.
       val entry =
         s"""{"epoch_id":$epochId,"n_rows":${stats.getLong(0)},""" +
           s""""max_event_id":${stats.getLong(1)},"min_event_id":${stats.getLong(2)}}"""

@@ -2,13 +2,22 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkEntry
+import graft.{Q, SparkEntry}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{FormattedMode, LogicalRDD}
 
-/** Dev tool: writes PLANS.md — AQE-final formatted physical plans for
-  * the flagship queries, as reviewable evidence of scan pruning,
+/** Writes physical plans as reviewable evidence of scan pruning,
   * pushdown, join strategy and codegen coverage.
+  *
+  * With at most an `sfDir` argument it writes PLANS.md: the AQE-final
+  * formatted plans of the flagship queries. With a tag and a query
+  * list it writes `plans/<query>_<tag>.txt` per query, holding the
+  * formatted plan, the AQE-final executed plan and the optimized plan
+  * of every snapshot the query reads, so the plans before and after a
+  * change can be diffed.
   * Usage: runMain graft.tools.PlanDump [sfDir]
+  *        runMain graft.tools.PlanDump <tag> <q1,q2,...> [sfDir]
   */
 object PlanDump {
   private val flagship = Seq(
@@ -37,51 +46,52 @@ object PlanDump {
     "q_bootstrap_ci", "q_graph_kcore", "q_graph_clustering",
     "q_stickiness", "q_changepoint", "q_theil_sen", "q_centroid_shift",
     "q_wilson_lb", "q_churn", "q_elasticity",
-    // round-12 diagnostics: the window-df rewrite, the broadcast-grid
-    // JS drift, the shared lag frame, and the probe-bounded calibration
+    // the window-df rewrite, the broadcast-grid JS drift, the shared
+    // lag frame, and the probe-bounded calibration
     "q_cross_doc_ngram", "q_js_divergence", "q_ljung_box", "q_hurst",
     "q_minhash_est_err", "q_audience_overlap", "q_length_profile",
-    // round-14 additions worth reading: the shared cents-grid family,
-    // the integer HITS iteration, the one-shuffle filter cascade, and
-    // the two-list capture-recapture overlap
+    // the shared cents-grid family, the integer HITS iteration, the
+    // one-shuffle filter cascade, and the two-list capture-recapture
+    // overlap
     "q_ks_test", "q_wasserstein_1d", "q_energy_dist", "q_hits",
     "q_filter_cascade", "q_capture_recapture", "q_compaction_plan",
     "q_periodogram", "q_trimmed_mean", "q_vocab_coverage",
-    // round-15 additions worth reading: the band-offset abc rewrite,
-    // the TopKAgg-shaped ranking metrics, the AUC face of the cents
-    // grid, the audit trio's keyed probes, the trigram-LM bucketing
-    // and the covariance-spectrum expansion
+    // the band-offset abc rewrite, the TopKAgg-shaped ranking metrics,
+    // the AUC face of the cents grid, the audit trio's keyed probes,
+    // the trigram-LM bucketing and the covariance-spectrum expansion
     "q_abc_class", "q_ndcg", "q_auc_roc", "q_ri_audit",
     "q_fd_violations", "q_ppl_bucket", "q_embed_dim", "q_qini",
     "q_blocking_quality", "q_matrix_profile", "q_burst_detect",
     "q_textrank", "q_keyphrase", "q_token_novelty",
-    // round-15 extension batch worth reading: the hub-capped wedge
-    // expansion, the two new cents-grid rank tests, the shared
-    // periodogram frame, and the bigram-entropy margin joins
+    // the hub-capped wedge expansion, two more cents-grid rank tests,
+    // the shared periodogram frame, and the bigram-entropy margin joins
     "q_graph_ra", "q_ansari_bradley", "q_brunner_munzel",
     "q_spectral_entropy", "q_word_entropy", "q_key_candidates",
     "q_chao1", "q_distinct_ngrams",
-    // round-16 flagships: the DP/iterative and attribution shapes
+    // the DP/iterative and attribution shapes
     "q_dtw", "q_macd", "q_sigma_clip", "q_backtest_naive",
     "q_shapley_attribution", "q_markov_attribution", "q_fdr_bh",
     "q_isotonic", "q_kmeans_1d", "q_gmm_em", "q_logistic_1d",
     "q_dedup_verify", "q_bleu_pairs", "q_fellegi_sunter",
     "q_kn_logprob", "q_graph_closeness", "q_label_propagation",
     "q_t_closeness", "q_xyz_class", "q_ols2", "q_weibull_fit",
-    // round-17 flagships: the in-row trigram rewrite is read under
-    // q_ppl_bucket above; here the decorrelated LATERAL, the audio
-    // decode rollups, the sq8 broadcast-quantize pass, the rich-club
-    // degree joins, and the three new dailyGrid screens
+    // the decorrelated LATERAL, the audio decode rollups, the sq8
+    // broadcast-quantize pass, the rich-club degree joins, and three
+    // dailyGrid screens
     "q_join_lateral", "q_audio_features", "q_audio_silence",
     "q_sq8_recall", "q_graph_rich_club", "q_word_len_hist",
     "q_punct_profile", "q_cox_stuart", "q_bartels_rank", "q_pinball",
-    // round-18 flagships: the PQ codebook/assignment broadcasts and
-    // the GIF87a per-partition decode rollup, plus q_ppl_bucket's
-    // row-guarded LM broadcast and the unhinted supplier/customer
-    // chains (all re-read above under their own names)
+    // the PQ codebook/assignment broadcasts and the GIF87a
+    // per-partition decode rollup
     "q_pq_recall", "q_video_frames")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args match {
+    case Array(tag, names, sfArgs @ _*) =>
+      withSession(sfArgs)(dumpQueries(tag, names.split(',').toSeq))
+    case _ => withSession(args.toSeq)(dumpFlagship)
+  }
+
+  private def withSession(args: Seq[String])(dump: (SparkSession, String) => Unit): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")
@@ -92,7 +102,10 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try dump(spark, sfDir) finally spark.stop()
+  }
 
+  private def dumpFlagship(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — AQE-final physical plans of flagship queries\n\n")
     sb.append(s"Generated by `graft.tools.PlanDump` on `$sfDir`. Things to see:\n")
@@ -103,12 +116,40 @@ object PlanDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(df.queryExecution.explainString(FormattedMode))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"PLANS.md written (${flagship.size} queries)")
-    spark.stop()
   }
+
+  private def dumpQueries(tag: String, names: Seq[String])
+                         (spark: SparkSession, sfDir: String): Unit = {
+    Files.createDirectories(Paths.get("plans"))
+    for (name <- names) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val formatted = df.queryExecution.explainString(FormattedMode)
+      df.collect() // finalize this QueryExecution's adaptive plan
+      val finalPlan = df.queryExecution.executedPlan.toString
+      val body =
+        s"== $name ($tag, $sfDir) ==\n\n--- explain formatted ---\n" +
+          formatted + "\n--- AQE-final executed plan ---\n" + finalPlan +
+          snapshotOrigins(df.queryExecution.optimizedPlan, 0) + "\n"
+      val out = Paths.get("plans", s"${name}_$tag.txt")
+      Files.writeString(out, body)
+      println(s"WROTE $out")
+    }
+  }
+
+  /** Q.snapshot truncates lineage onto LogicalRDD leaves; resolving each
+    * leaf through the snapshot-origin registry (recursively) shows the
+    * whole query, not just the post-snapshot tail. */
+  private def snapshotOrigins(plan: LogicalPlan, depth: Int): String =
+    if (depth > 6) ""
+    else plan.collect { case r: LogicalRDD => r.rdd.id }.flatMap { id =>
+      Q.snapshotOrigin(id).map { origin =>
+        s"\n--- snapshot origin (rdd $id) optimized plan ---\n" +
+          origin.toString + snapshotOrigins(origin, depth + 1)
+      }
+    }.mkString
 }

@@ -29,7 +29,7 @@ import graft.streaming.{OffsetLedger, Streams}
   *
   * Usage: sbt "runMain graft.tools.Soak [seconds] [rowsPerBatch]"
   * (defaults 60 s, 5000 rows/batch); StreamingSpec runs a short one in
-  * every test round.
+  * every suite run.
   */
 object Soak {
 

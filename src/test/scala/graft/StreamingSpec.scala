@@ -1669,17 +1669,26 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("t_sess").outputMode("complete").start()
     withQuery(q) {
       // user 1: events at 0 and 10 min (gap 10 < 30 → one session),
-      // then 70 min (gap 60 ≥ 30 → new session)
-      in.addData(ev(1, 0), ev(2, 10), ev(3, 70))
+      // then 70 min (gap 60 ≥ 30 → new session). Users 2, 3, 4: two
+      // events 1,799 / 1,800 / 1,801 s apart, the boundary of the
+      // 30-minute gap that q_session_batch's oracle splits on (> 1800).
+      // One batch, so no event arrives behind the watermark.
+      val atGap = Seq(1799L -> 2L, 1800L -> 3L, 1801L -> 4L).flatMap { case (gap, user) =>
+        Seq(0L, gap).map(off =>
+          Ev(10 * user + off, new Timestamp((baseSec + off) * 1000L), user, "click", 1.0))
+      }
+      in.addData(Seq(ev(1, 0), ev(2, 10), ev(3, 70)) ++ atGap)
       q.processAllAvailable()
       val rows = spark.table("t_sess")
         .selectExpr("user_id",
           "unix_timestamp(session_window.start) AS s",
           "unix_timestamp(session_window.end) AS e", "n_events")
         .as[(Long, Long, Long, Long)].collect().toSet
-      assert(rows === Set(
+      assert(rows.filter(_._1 == 1L) === Set(
         (1L, baseSec, baseSec + 10 * 60 + 1800L, 2L), // [0, 10min] + 30min gap
         (1L, baseSec + 70 * 60L, baseSec + 70 * 60 + 1800L, 1L)))
+      val sessionsPerUser = rows.toSeq.groupBy(_._1).map { case (u, rs) => u -> rs.size }
+      assert(sessionsPerUser === Map(1L -> 2, 2L -> 1, 3L -> 1, 4L -> 2))
     }
   }
 

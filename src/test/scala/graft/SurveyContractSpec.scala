@@ -136,8 +136,7 @@ class SurveyContractSpec extends AnyFunSuite {
     // both key off BenchFloors; a query without a floor silently falls
     // back to the weaker absolute threshold, and a floor for a removed
     // query is dead weight. Queries added since the last floor harvest
-    // fail here until tools/gen_floors.py runs — the lockstep the r10
-    // verdict asked for (tools.CountQ checked it manually before).
+    // fail here until tools/gen_floors.py runs.
     val unfloored = SparkEntry.queries.keySet -- BenchFloors.floor.keySet
     assert(unfloored.isEmpty,
       s"bench queries without a committed floor (run tools/gen_floors.py): " +
@@ -145,5 +144,31 @@ class SurveyContractSpec extends AnyFunSuite {
     val stale = BenchFloors.floor.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty,
       s"floors for queries that no longer exist: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every graft.tools entry point is listed on README's tools/ line, and only those") {
+    // The tools ship in the library jar; a tool nobody documents is a
+    // one-off that outlived its investigation. Each top-level object is
+    // attributed the `def main` between its declaration and the next.
+    val topLevelObject = """(?m)^object (\w+)""".r
+    val defined = Paths.get("src/main/scala/graft/tools").toFile.listFiles().toSeq
+      .filter(_.getName.endsWith(".scala"))
+      .flatMap { f =>
+        val src = new String(Files.readAllBytes(f.toPath), "UTF-8")
+        val starts = topLevelObject.findAllMatchIn(src).toSeq
+        starts.zip(starts.drop(1).map(_.start) :+ src.length).collect {
+          case (m, end) if src.substring(m.start, end).contains("def main(") => m.group(1)
+        }
+      }.toSet
+    // README's source tree lists each tool on a 24-space-indented
+    // continuation line of `  tools/`, name first, then its purpose
+    val readme = Files.readAllLines(Paths.get("README.md")).asScala
+    val block = readme.dropWhile(!_.startsWith("  tools/")).drop(1)
+      .takeWhile(_.startsWith(" " * 24))
+    val listed = block.flatMap(l => """^ {24}([A-Z]\w*) {2,}""".r.findFirstMatchIn(l))
+      .map(_.group(1)).toSet
+    assert(listed.nonEmpty, "README has no tools/ listing")
+    assert(defined -- listed === Set.empty[String], "tools missing from README's tools/ line")
+    assert(listed -- defined === Set.empty[String], "README lists tools that do not exist")
   }
 }
