@@ -50,6 +50,17 @@ object Q {
     out
   }
 
+  /** Release a superseded [[snapshot]]'s blocks: its plan is a
+    * LogicalRDD over exactly the RDD localCheckpoint persisted, so
+    * unpersisting that RDD frees those blocks without touching anything
+    * else in the session. (Reliable checkpoints don't persist; unpersist
+    * is then a no-op and the checkpoint files follow the job's cleanup
+    * policy.) */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   // Checkpointing truncates lineage to a LogicalRDD leaf, which would
   // also erase the evidence PlanAuditSpec's broadcast-bound walk needs
   // to prove a hinted build side bounded. Each snapshot therefore

@@ -60,19 +60,6 @@ object Graph {
     * edge. Keeps the graph catalog-sized as orders accumulate. */
   private val MinSupport = 2
 
-  /** Round snapshot for every iterative op in this file: eager
-    * localCheckpoint on a single box; the RELIABLE df.checkpoint branch
-    * whenever the session has a checkpoint dir configured — which is
-    * what a real cluster deployment sets (HDFS/S3), because
-    * localCheckpoint blocks die with their executor and one lost
-    * executor would otherwise unwind every iteration since the
-    * snapshot. Keying off SparkContext.getCheckpointDir (not a
-    * parameter) means the UNCHANGED SparkEntry.queries entries switch
-    * branches with deployment config alone — same contract as
-    * TextPipeline.connectedComponents' explicit checkpointDir param,
-    * exercised for each iterative op in GraphScaleSpec. */
-  private[graft] def snapshot(df: DataFrame): DataFrame = Q.snapshot(df)
-
   /** Full unrounded rank table (int64 node id, pr) after [[Iterations]]
     * power-iteration rounds — the q_pagerank body before labeling /
     * rounding / top-50, exposed so TwinAndPropertySpec can assert mass
@@ -84,8 +71,8 @@ object Graph {
     val ed0 = pairs.select(col("p").as("src"), col("sn").as("dst"))
       .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
     val deg = ed0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = ed0.join(deg, "src").transform(snapshot)
-    val nodes = e.select(col("src").as("node")).distinct().transform(snapshot)
+    val e = ed0.join(deg, "src").transform(Q.snapshot)
+    val nodes = e.select(col("src").as("node")).distinct().transform(Q.snapshot)
     val nDf = nodes.agg(count(lit(1)).as("n_nodes"))
     // ONE count guards every round's broadcast hint: ranks keep exactly
     // one row per node, so |ranks| = |nodes| at every round (r19 —
@@ -192,10 +179,10 @@ object Graph {
       // the oracle's string nodes, and the per-round deg join
       // disappears. The snapshot is taken once — without it every round
       // would re-derive the distinct-pair scan of lineitem (the 100 TB
-      // fact table). localCheckpoint is the single-box stand-in; a
-      // cluster deployment sets a reliable checkpointDir exactly as in
-      // TextPipeline.connectedComponents. String labels are restored
-      // only for the final 50 rows.
+      // fact table). Q.snapshot takes localCheckpoint on a single box;
+      // a cluster deployment sets a session checkpoint dir and gets
+      // reliable checkpoints. String labels are restored only for the
+      // final 50 rows.
       pagerankAll(s, d)
         .select(concat(
           when(col("node") % 2 === 0, "p:").otherwise("s:"),
@@ -449,11 +436,11 @@ object Graph {
         .distinct()
       val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
         .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       val root = ed.groupBy("src").agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src")).limit(1)
         .select(col("src").as("id"), lit(0L).as("depth"))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       // The visited set is only ever a LOOKUP for the anti-join, so it
       // never needs its own snapshot: anti-join against the lazy union
       // of the already-checkpointed per-hop frontiers. Snapshotting the
@@ -485,7 +472,7 @@ object Graph {
           .select(col("dst").as("id")).distinct()
           .join(visited, Seq("id"), "left_anti")
           .select(col("id"), lit(h.toLong).as("depth"))
-          .transform(snapshot)
+          .transform(Q.snapshot)
         frontiers = nxt :: frontiers
         frontier = nxt
         frontierRows = nxt.count()
@@ -535,7 +522,7 @@ object Graph {
         |SELECT node, deg, tri_cnt, clustering FROM cc
         |ORDER BY clustering DESC, deg DESC, node
         |LIMIT 20""".stripMargin) { (s, d) =>
-      val edges = coPairs(s, d).transform(snapshot)
+      val edges = coPairs(s, d).transform(Q.snapshot)
       // ONE snapshotted degree table serves both the readout and the
       // triangle census's orientation joins (r19, guide §2.4)
       val deg = Q.snapshot(
@@ -586,7 +573,7 @@ object Graph {
         |SELECT CAST(floor(n / 2.0) AS BIGINT) AS n_edges, n AS n_directed,
         |       ${Q.sqlR6("(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy) / (sqrt(n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx) * sqrt(n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy))")} AS assortativity
         |FROM st""".stripMargin) { (s, d) =>
-      val edges = coPairs(s, d).transform(snapshot)
+      val edges = coPairs(s, d).transform(Q.snapshot)
       // degree table feeds both endpoint joins: snapshot once,
       // broadcast under the node-state row guard so the edge frame
       // streams through both joins unexchanged (r19, guide §3.1/§2.4)
@@ -653,7 +640,7 @@ object Graph {
         |       ${Q.sqlR6("sum(t12) / 1e12")} AS modularity
         |FROM terms CROSS JOIN m
         |GROUP BY 1""".stripMargin) { (s, d) =>
-      val e = coPairs(s, d).transform(snapshot)
+      val e = coPairs(s, d).transform(Q.snapshot)
       val brand = Tables.load(s, d, "part").select(col("p_partkey"), col("p_brand"))
       val mRow = e.agg(count(lit(1)).as("m"))
       val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
@@ -693,12 +680,12 @@ object Graph {
     // loop so the two sides cannot drift in round count. Counts only —
     // pure integer parity.
     Q("q_graph_kcore", kcoreOracle) { (s, d) =>
-      var e = coPairs(s, d).transform(snapshot)
+      var e = coPairs(s, d).transform(Q.snapshot)
       val rows = (1 to KcoreRounds).map { i =>
         val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
           .groupBy("node").agg(count(lit(1)).as("dg"))
         val keep = deg.filter(col("dg") >= KcoreK).select("node")
-          .transform(snapshot)
+          .transform(Q.snapshot)
         // keep is node-sized: under the row guard both endpoint
         // semi-filters broadcast it, so the edge frame never shuffles
         // in a peel round — the only exchange left is the degree agg
@@ -710,7 +697,7 @@ object Graph {
         e = e
           .join(bk.withColumnRenamed("node", "a"), "a")
           .join(bk.withColumnRenamed("node", "b"), "b")
-          .select("a", "b").transform(snapshot)
+          .select("a", "b").transform(Q.snapshot)
         e.agg(count(lit(1)).as("n_edges"))
           .select(lit(i.toLong).as("round"), lit(nKeep).as("n_nodes"),
             col("n_edges"))
@@ -790,7 +777,7 @@ object Graph {
          |FROM nw
          |ORDER BY ra6 DESC, a, b
          |LIMIT 20""".stripMargin) { (s, d) =>
-      val e = coPairs(s, d).transform(snapshot)
+      val e = coPairs(s, d).transform(Q.snapshot)
       val adj = e.select(col("a").as("n"), col("b").as("x"))
         .unionAll(e.select(col("b").as("n"), col("a").as("x")))
       // neighbor lists per candidate common neighbor, hub-capped; the
@@ -845,7 +832,7 @@ object Graph {
          |FROM nw
          |ORDER BY aa6 DESC, a, b
          |LIMIT 20""".stripMargin) { (s, d) =>
-      val e = coPairs(s, d).transform(snapshot)
+      val e = coPairs(s, d).transform(Q.snapshot)
       val adj = e.select(col("a").as("n"), col("b").as("x"))
         .unionAll(e.select(col("b").as("n"), col("a").as("x")))
       val nbrs = adj.groupBy("n").agg(sort_array(collect_set(col("x"))).as("xs"))
@@ -907,13 +894,13 @@ object Graph {
         .distinct()
       val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
         .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       val roots = ed.groupBy("src").agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src")).limit(5)
         .select(col("src").as("sid"))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       val seed = roots.select(col("sid"), col("sid").as("id"), lit(0L).as("depth"))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       var frontiers = List(seed)
       var frontier = seed
       // same hop shape as q_graph_bfs (r19): the (sid, id) frontier and
@@ -931,7 +918,7 @@ object Graph {
           .select(col("sid"), col("dst").as("id")).distinct()
           .join(visited, Seq("sid", "id"), "left_anti")
           .withColumn("depth", lit(h.toLong))
-          .transform(snapshot)
+          .transform(Q.snapshot)
         frontiers = nxt :: frontiers
         frontier = nxt
         frontierRows = nxt.count()
@@ -996,10 +983,10 @@ object Graph {
         .distinct()
       val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
         .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       var lab = ed.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl"))
-        .transform(snapshot)
+        .transform(Q.snapshot)
       // ONE count guards every round's broadcast hint (labels keep
       // exactly one row per node). Round shape (r19, guide §3.1/§2.4):
       // edges(BHJ over the broadcast labels) → repartition(nid) → both
@@ -1018,7 +1005,7 @@ object Graph {
           .agg(count(lit(1)).as("c"))
           .groupBy(col("nid").as("id"))
           .agg(min_by(col("lbl"), struct((-col("c")).as("nc"), col("lbl").as("l"))).as("lbl"))
-          .transform(snapshot)
+          .transform(Q.snapshot)
       }
       lab.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_nodes"))
@@ -1063,7 +1050,7 @@ object Graph {
       val pairs = Tables.load(s, d, "lineitem")
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sn"))
         .distinct()
-        .transform(snapshot)
+        .transform(Q.snapshot)
       val dp = pairs.groupBy("p").agg(count(lit(1)).as("dp"))
       val ds = pairs.groupBy("sn").agg(count(lit(1)).as("ds"))
       val ks = explode(array(lit(2L), lit(4L), lit(8L), lit(16L))).as("k")
@@ -1094,7 +1081,7 @@ object Graph {
     * never a catalog-sized window sort); ranks and the max-normalizer
     * run over the 10-row frame only (rank 1 IS the global max). */
   private[graft] def hitsOf(pairsIn: DataFrame): DataFrame = {
-    val pairs = snapshot(pairsIn)
+    val pairs = Q.snapshot(pairsIn)
     // ONE scalar readout sizes both node domains; under the node-state
     // bound every score frame broadcasts into its power-iteration join,
     // so the pairs frame streams past a build each round instead of
@@ -1206,7 +1193,7 @@ object Graph {
     coPairsWithSupport(s, d).select("a", "b")
 
   private[graft] def triangleCorners(s: SparkSession, d: String): DataFrame =
-    triangleCornersFrom(coPairs(s, d).transform(snapshot))
+    triangleCornersFrom(coPairs(s, d).transform(Q.snapshot))
 
   /** [[triangleCorners]] over an ALREADY-materialized (a, b) edge frame —
     * lets q_graph_clustering share one checkpointed edge list between
@@ -1239,7 +1226,7 @@ object Graph {
           col("db") * lit(4294967296L) + col("b")).as("ku"),
         greatest(col("da") * lit(4294967296L) + col("a"),
           col("db") * lit(4294967296L) + col("b")).as("kv"))
-      .transform(snapshot)
+      .transform(Q.snapshot)
     val w1 = oriented.select(col("ku"), col("kv").as("kx"))
     val w2 = oriented.select(col("ku"), col("kv").as("ky"))
     val closing = oriented.select(col("ku").as("kx"), col("kv").as("ky"))

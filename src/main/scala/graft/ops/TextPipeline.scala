@@ -407,19 +407,16 @@ object TextPipeline {
     * converge in a handful of rounds, and the round count stays flat at
     * 100 TB (only the per-round shuffle width grows).
     *
-    * Durability: with `checkpointDir` unset, round snapshots use eager
-    * `localCheckpoint` — right for single-box runs, but the blocks live
-    * on executor LOCAL disks with lineage truncated, so on a real
-    * cluster an executor loss mid-computation is unrecoverable. Pass a
-    * reliable `checkpointDir` (HDFS/S3) there and every snapshot
-    * becomes a `checkpoint()` to shared storage instead. Either way,
-    * each round releases the superseded round's blocks, so block-manager
-    * footprint is O(graph), not O(graph × rounds); only the RETURNED
-    * labels stay materialized (caller-owned). */
-  private[graft] def connectedComponents(
-      pairs: DataFrame, maxRounds: Int = 30,
-      checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsWithRounds(pairs, maxRounds, checkpointDir)._1
+    * Durability: round snapshots are [[graft.Q.snapshot]]s — eager
+    * `localCheckpoint` on a single box, a reliable `checkpoint()` to
+    * shared storage (HDFS/S3) whenever the session has a checkpoint dir
+    * set, which is what a cluster deployment configures, because
+    * local blocks die with their executor. Either way, each round
+    * releases the superseded round's blocks ([[graft.Q.release]]), so
+    * block-manager footprint is O(graph), not O(graph × rounds); only
+    * the RETURNED labels stay materialized (caller-owned). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxRounds: Int = 30): DataFrame =
+    connectedComponentsWithRounds(pairs, maxRounds)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds it
     * took to reach the checksum fixpoint (including the confirming
@@ -428,41 +425,14 @@ object TextPipeline {
     * regression there would otherwise surface only as a silent
     * wall-clock multiple (each round is a full join+agg job). */
   private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, maxRounds: Int = 30,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val sc = pairs.sparkSession.sparkContext
-    // setCheckpointDir is SESSION-GLOBAL state: remember what was there
-    // and restore it on every exit path, or one explicit-dir CC call
-    // would silently flip every later Q.snapshot/Graph.snapshot in the
-    // session onto the reliable branch against a temp dir (r12 review).
-    val priorCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def restoreCheckpointDir(): Unit =
-      if (checkpointDir.isDefined && priorCheckpointDir != sc.getCheckpointDir)
-        sc.setCheckpointDir(priorCheckpointDir.orNull)
-    // checkpoint (not persist) on every iteration state: persist only
+      pairs: DataFrame, maxRounds: Int = 30): (DataFrame, Int) = {
+    // snapshot (not persist) every iteration state: persist only
     // caches EXECUTION — the logical plan still nests every prior
     // round, and with 2-3 self-references per round Catalyst would
     // re-analyze an exponentially growing tree. Checkpointing replaces
     // the plan with the materialized RDD, keeping per-round planning
     // O(1).
-    // an explicit param wins; otherwise inherit a session-level
-    // checkpoint dir (the deployment-config switch Graph.snapshot
-    // keys off), falling back to localCheckpoint on a bare single box
-    def snapshot(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined || sc.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    // A snapshot's plan is a LogicalRDD over exactly the RDD that
-    // localCheckpoint persisted — unpersisting it releases that round's
-    // blocks without touching anything else in the session. (Reliable
-    // checkpoints don't persist; unpersist is then a no-op and the
-    // files under checkpointDir follow the job's cleanup policy.)
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    try {
-    val edges = snapshot(
+    val edges = Q.snapshot(
       pairs.select(col("d1").as("src"), col("d2").as("dst"))
         .union(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
     // seed labels with min(self, direct neighbors) — the first
@@ -470,7 +440,7 @@ object TextPipeline {
     // directions, so one groupBy sees every neighbor). For the common
     // near-dup graph of 2-3-node components this alone is the fixpoint,
     // leaving just the confirming round.
-    var labels = snapshot(
+    var labels = Q.snapshot(
       edges.select(col("src").as("id"), col("dst").as("lbl"))
         .union(edges.select(col("src").as("id"), col("src").as("lbl")))
         .groupBy("id").agg(min("lbl").as("lbl")))
@@ -497,17 +467,17 @@ object TextPipeline {
       val ptr = labels.select(col("id").as("pid"), col("lbl").as("plbl"))
       val viaPtr = labels.join(ptr, col("lbl") === col("pid"))
         .select(col("id"), col("plbl").as("lbl"))
-      val next = snapshot(
+      val next = Q.snapshot(
         labels.union(viaEdge).union(viaPtr)
           .groupBy("id").agg(min("lbl").as("lbl")))
       val cur = checksum(next)
       converged = cur == prev
-      release(labels) // superseded round state — next is materialized
+      Q.release(labels) // superseded round state — next is materialized
       labels = next
       prev = cur
       round += 1
     }
-    release(edges) // labels is materialized; the edge blocks are done
+    Q.release(edges) // labels is materialized; the edge blocks are done
     // Hitting the round cap without the checksum fixpoint means the
     // labels are NOT component minima yet — returning them silently
     // would yield wrong cluster ids with no signal. Path halving makes
@@ -517,7 +487,6 @@ object TextPipeline {
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxRounds rounds")
     (labels, round)
-    } finally restoreCheckpointDir()
   }
 
   def defs: Seq[QueryDef] = Seq(

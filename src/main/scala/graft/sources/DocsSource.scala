@@ -252,23 +252,17 @@ private[sources] class DocsReaderFactory(fields: Array[String])
 private[sources] case class DocsOffset(positions: Map[Int, Long]) extends Offset {
   override def json(): String =
     if (positions.keySet == Set(0)) positions(0).toString
-    else positions.toSeq.sortBy(_._1)
-      .map { case (p, o) => s""""$p":$o""" }.mkString("{", ",", "}")
+    else graft.streaming.KafkaSource.partitionsJson(positions)
 }
 
 private[sources] object DocsOffset {
   def single(pos: Long): DocsOffset = DocsOffset(Map(0 -> pos))
   def parse(json: String): DocsOffset = {
     val t = json.trim
-    if (t.startsWith("{")) {
-      val inner = t.stripPrefix("{").stripSuffix("}").trim
-      val entries = if (inner.isEmpty) Map.empty[Int, Long]
-      else inner.split(",").map { kv =>
-        val Array(k, v) = kv.split(":")
-        k.trim.stripPrefix("\"").stripSuffix("\"").toInt -> v.trim.toLong
-      }.toMap
-      DocsOffset(entries)
-    } else single(t.toLong)
+    if (t.startsWith("{") && t.endsWith("}"))
+      DocsOffset(graft.streaming.KafkaSource.parsePartitions(
+        t.stripPrefix("{").stripSuffix("}"), "graft-docs WAL offset"))
+    else single(t.toLong)
   }
 }
 

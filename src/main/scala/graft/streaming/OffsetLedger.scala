@@ -200,12 +200,41 @@ object KafkaSource {
     * external per-partition offset map — e.g. reconstructed from an
     * [[OffsetLedger]] enriched with (topic, partition) columns. */
   def startingOffsetsJson(topic: String, partitionOffsets: Map[Int, Long]): String =
+    s"""{"$topic":${partitionsJson(partitionOffsets)}}"""
+
+  /** The per-partition `{"p":off,…}` map, partitions sorted so equal
+    * maps render to equal bytes — the inner object of
+    * [[startingOffsetsJson]] and graft-docs' multi-partition WAL
+    * offset. */
+  def partitionsJson(partitionOffsets: Map[Int, Long]): String =
     partitionOffsets.toSeq.sorted
       .map { case (p, off) => s""""$p":$off""" }
-      .mkString(s"""{"$topic":{""", ",", "}}")
+      .mkString("{", ",", "}")
 
   private val TopicRe = """"((?:[^"\\]|\\.)+)"\s*:\s*\{([^{}]*)\}""".r
   private val PartRe = """"(-?\d+)"\s*:\s*(-?\d+)""".r
+
+  private def residueOk(s: String): Boolean = s.forall(c => c == ',' || c.isWhitespace)
+
+  /** Strict inverse of [[partitionsJson]] on the text between its
+    * braces, `where` naming the input in errors. Total over the input,
+    * not just over what the regex happens to match: a positioning
+    * parser that silently dropped a malformed entry ("p1":500, a
+    * truncated brace, trailing garbage) would reposition the stream at
+    * the WRONG offset instead of failing — the one thing an offset
+    * ledger must never do. So after extracting entries it excises the
+    * matched spans and requires only separators remain, and it rejects
+    * a duplicated partition key, which would mean two candidate
+    * positions (.toMap would silently keep the last one). */
+  def parsePartitions(inner: String, where: String): Map[Int, Long] = {
+    val partSeq = PartRe.findAllMatchIn(inner)
+      .map(pm => pm.group(1).toInt -> pm.group(2).toLong).toSeq
+    require(residueOk(PartRe.replaceAllIn(inner, "")),
+      s"unparseable partition entries in $where near: $inner")
+    require(partSeq.map(_._1).distinct.length == partSeq.length,
+      s"duplicate partition keys in $where: $inner")
+    partSeq.toMap
+  }
 
   /** Inverse of [[startingOffsetsJson]]: parse the Kafka-shaped
     * `{"topic":{"0":off,…}}` resume JSON back into per-topic partition
@@ -220,29 +249,13 @@ object KafkaSource {
     val t = json.trim
     require(t.startsWith("{") && t.endsWith("}"),
       s"startingOffsets must be a JSON object, got: $t")
-    // TOTALITY over the input, not just over what the regexes happen to
-    // match: a resume-positioning parser that silently drops a
-    // malformed partition entry ("p1":500, a truncated brace, trailing
-    // garbage) would reposition the stream at the WRONG offset instead
-    // of failing — the one thing an offset ledger must never do (r12
-    // review). After extracting entries, excise the matched spans and
-    // require only structural characters remain at both levels.
-    def residueOk(s: String): Boolean = s.forall(c => c == ',' || c.isWhitespace)
+    // the same totality rule as parsePartitions, one level up: after
+    // extracting topic entries, only separators may remain
     val body = t.stripPrefix("{").stripSuffix("}")
     val topicSeq = TopicRe.findAllMatchIn(body).map { m =>
-      val inner = m.group(2)
-      val partSeq = PartRe.findAllMatchIn(inner)
-        .map(pm => pm.group(1).toInt -> pm.group(2).toLong).toSeq
-      val innerResidue = PartRe.replaceAllIn(inner, "")
-      require(residueOk(innerResidue),
-        s"unparseable partition entries in startingOffsets near: $inner")
-      require(partSeq.nonEmpty, s"topic '${m.group(1)}' carries no partition offsets: $t")
-      // a duplicated partition key means two candidate resume positions
-      // — .toMap would silently keep the last one, repositioning the
-      // stream at an arbitrary winner (r12 review)
-      require(partSeq.map(_._1).distinct.length == partSeq.length,
-        s"duplicate partition keys in startingOffsets for '${m.group(1)}': $inner")
-      m.group(1) -> partSeq.toMap
+      val parts = parsePartitions(m.group(2), s"startingOffsets for '${m.group(1)}'")
+      require(parts.nonEmpty, s"topic '${m.group(1)}' carries no partition offsets: $t")
+      m.group(1) -> parts
     }.toSeq
     val outerResidue = TopicRe.replaceAllIn(body, "")
     require(residueOk(outerResidue),

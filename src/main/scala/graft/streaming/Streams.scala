@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
+import scala.reflect.runtime.universe.TypeTag
+
 /** A typed event row — the engine's streaming record (the Spark-native
   * generalization of the reference's Kafka (key, value, offset, ts)
   * record after payload parsing). */
@@ -57,12 +59,25 @@ final case class SkylineOut(ver: Long, cents: Long, day: Long)
   *    ops.TimeWindows — watermarks are a no-op in batch mode, which is
   *    exactly what makes twin-equivalence testable).
   *
+  * Two shapes recur below:
+  *  - a streaming grid here, its read-time fold in `ops`: a statistic
+  *    that is not mergeable state streams as the mergeable grid it is
+  *    computed from (counts, moments, cells), and the streaming side
+  *    reads it through the SAME `graft.ops` fold its batch twin runs,
+  *    so the twins cannot drift;
+  *  - a day-close monitor = zero state + fold: each daily monitor is a
+  *    closed-day state, its zero and the fold that closes one day into
+  *    it, run by the shared `dayCloseMonitor` scaffold.
+  *
   * Scale notes: windowed aggregations shuffle once on (window, key) and
   * keep state per open window in the executor state store; watermarks
   * bound that state (no watermark = unbounded state at 100 TB —
   * every transform here therefore takes one).
   */
 object Streams {
+
+  /** Round half up onto the 1e-6 lattice the batch twins' r6 uses. */
+  private def r6(d: Double): Double = math.floor(d * 1000000 + 0.5) / 1000000
 
   /** Tumbling event-time windows: counts + value sum per (window, type). */
   def tumbling(events: DataFrame, size: String = "10 minutes",
@@ -163,11 +178,6 @@ object Streams {
       col("event_type"))
       .agg(count(lit(1)).as("c"))
 
-  /** Read-time entropy projection over a [[catEntropyCounts]] grid —
-    * delegates to the SAME fold the batch operator runs. */
-  def catEntropyOf(grid: DataFrame): DataFrame =
-    graft.ops.Inference.entropyOfCells(grid)
-
   /** Streaming exact-percentile grid — the streaming face of batch
     * q_tail_exact, split the s_cat_entropy way: the stream maintains
     * only the (event_type, cents) COUNT grid (associative,
@@ -180,10 +190,6 @@ object Streams {
     events.groupBy(col("event_type"),
       floor(col("value") * 100 + 0.5).cast("long").as("c"))
       .agg(count(lit(1)).as("k"))
-
-  /** Read-time percentile projection over a [[tailCounts]] grid. */
-  def tailOf(grid: DataFrame): DataFrame =
-    graft.ops.Analytics.tailFold(grid)
 
   /** Streaming z-score anomaly flags — the streaming face of batch
     * q_anomaly, split the way production does it: per-type mean/stddev
@@ -507,61 +513,75 @@ object Streams {
       }
   }
 
-  /** Streaming Page–Hinkley drift monitor (s_page_hinkley) — the
-    * incremental face of batch q_page_hinkley: per event type, the
-    * exact integer-lattice recurrence m6 += ⌊(y_d − ȳ_d)·1e6 + ½⌋,
-    * PH = max(m6 − min m6), evaluated over DAILY counts with day-close
-    * semantics: a day folds into the recurrence when a LATER day first
-    * arrives for that type (until then its count keeps absorbing
-    * events), and each fold emits the running (n_days, ph, drift_day)
-    * profile — exactly the prefix the batch op would report over the
-    * closed days, because both walk the same int64 lattice in the same
-    * day order. State per type is eight longs (the open day + the
-    * sufficient statistics), never a history. Days arriving behind the
-    * open day drop — the same explicit lateness bound as
-    * [[newReturning]]; the batch-twin equality (StreamingSpec) holds
-    * whenever days first-arrive in event-time order, which is what a
-    * monitor consuming a live feed sees. Day indices share
-    * ops.Inference.Anchor so drift_day matches the batch op's x. */
-  def pageHinkley(events: Dataset[Ev]): Dataset[PhMark] = {
+  /** The day-close scaffold the daily monitors below share. Per event
+    * type, each micro-batch's events count into days on the
+    * ops.Inference.Anchor index (so every emitted day matches the batch
+    * twin's x), taken in day order. The state is one OPEN (day, count)
+    * pair beside the monitor's closed-day state `S`, starting at
+    * `zero`: the open day keeps absorbing events until a LATER day
+    * first arrives, which closes it through
+    * `fold(type, day, count, closed)` — returning the next closed state
+    * and the optional emission — and opens itself. A day arriving
+    * behind the open day drops — the same explicit lateness bound as
+    * [[newReturning]] — so the batch-twin equality (StreamingSpec)
+    * holds whenever days first-arrive in event-time order, which is
+    * what a monitor consuming a live feed sees. */
+  private def dayCloseMonitor[S: TypeTag, M <: Product : TypeTag](
+      events: Dataset[Ev], zero: S)(
+      fold: (String, Long, Long, S) => (S, Option[M])): Dataset[M] = {
     import events.sparkSession.implicits._
     val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
     events
       .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PhState, PhMark](
+      .flatMapGroupsWithState[DayClose[S], M](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[PhState]) =>
+        (typ: String, rows: Iterator[Ev], state: GroupState[DayClose[S]]) =>
           val days = rows
             .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
             .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(
-            PhState(Long.MinValue, 0L, 0L, 0L, 0L, Long.MaxValue, 0L, Long.MinValue))
-          val out = Seq.newBuilder[PhMark]
-          def fold(): Unit = { // close the open day into the recurrence
-            val n = st.n + 1
-            val s = st.s + st.openCount
-            val m6 = st.m6 +
-              math.floor((st.openCount - s.toDouble / n) * 1e6 + 0.5).toLong
-            val mn = math.min(st.mn, m6)
-            // strict > keeps the EARLIEST argmax day (the batch op's
-            // ORDER BY ph6 DESC, x tie-break); the first fold seeds it
-            val (ph6, drift) =
-              if (m6 - mn > st.ph6) (m6 - mn, st.openDay)
-              else if (st.driftDay == Long.MinValue) (st.ph6, st.openDay)
-              else (st.ph6, st.driftDay)
-            out += PhMark(typ, st.openDay, st.openCount, n, ph6 / 1e6, drift)
-            st = PhState(Long.MinValue, 0L, n, s, m6, mn, ph6, drift)
-          }
+          var st = state.getOption.getOrElse(DayClose(Long.MinValue, 0L, zero))
+          val out = Seq.newBuilder[M]
           days.foreach { case (d, c) =>
             if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
             else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
+            else if (d > st.openDay) {
+              val (closed, mark) = fold(typ, st.openDay, st.openCount, st.closed)
+              out ++= mark
+              st = DayClose(d, c, closed)
+            }
             // d < openDay: behind the fold horizon — dropped
           }
           state.update(st)
           out.result().iterator
       }
   }
+
+  /** Streaming Page–Hinkley drift monitor (s_page_hinkley) — the
+    * incremental face of batch q_page_hinkley: per event type, the
+    * exact integer-lattice recurrence m6 += ⌊(y_d − ȳ_d)·1e6 + ½⌋,
+    * PH = max(m6 − min m6), evaluated over DAILY counts with the
+    * [[dayCloseMonitor]] semantics: a day folds into the recurrence
+    * when a LATER day first arrives for that type (until then its count
+    * keeps absorbing events), and each fold emits the running
+    * (n_days, ph, drift_day) profile — exactly the prefix the batch op
+    * would report over the closed days, because both walk the same
+    * int64 lattice in the same day order. State per type is the open
+    * pair plus six longs of sufficient statistics, never a history. */
+  def pageHinkley(events: Dataset[Ev]): Dataset[PhMark] =
+    dayCloseMonitor(events, PhState(0L, 0L, 0L, Long.MaxValue, 0L, Long.MinValue)) {
+      (typ, x, y, st) => // fold the closing day into the recurrence
+        val n = st.n + 1
+        val s = st.s + y
+        val m6 = st.m6 + math.floor((y - s.toDouble / n) * 1e6 + 0.5).toLong
+        val mn = math.min(st.mn, m6)
+        // strict > keeps the EARLIEST argmax day (the batch op's
+        // ORDER BY ph6 DESC, x tie-break); the first fold seeds it
+        val (ph6, drift) =
+          if (m6 - mn > st.ph6) (m6 - mn, x)
+          else if (st.driftDay == Long.MinValue) (st.ph6, x)
+          else (st.ph6, st.driftDay)
+        (PhState(n, s, m6, mn, ph6, drift), Some(PhMark(typ, x, y, n, ph6 / 1e6, drift)))
+    }
 
   /** Streaming Mann–Kendall trend monitor (s_mann_kendall) — the
     * incremental face of batch q_mann_kendall: per event type,
@@ -578,51 +598,26 @@ object Streams {
     * counts — CALENDAR-bounded (≤366 longs), never stream-length
     * bounded; day indices share ops.Inference.Anchor with the batch
     * twin. */
-  def mannKendall(events: Dataset[Ev]): Dataset[MkMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[MkState, MkMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[MkState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(
-            MkState(Long.MinValue, 0L, 0L, 0L, Map.empty))
-          val out = Seq.newBuilder[MkMark]
-          def fold(): Unit = { // close the open day into the statistic
-            val y = st.openCount
-            val s = st.s + st.counts.iterator
-              .map { case (yo, t) => t * java.lang.Long.signum(y - yo) }.sum
-            val counts = st.counts.updated(y, st.counts.getOrElse(y, 0L) + 1L)
-            val n = st.n + 1
-            val tie = counts.valuesIterator
-              .map(t => t * (t - 1) * (2 * t + 5)).sum
-            val vn = n * (n - 1) * (2 * n + 5) - tie
-            // the batch z tree, mirrored: continuity-corrected normal
-            // approximation on exact int64 (S, Var·18), r6 at the end
-            val z =
-              if (vn <= 0) None
-              else {
-                val sg = java.lang.Long.signum(s).toLong
-                Some(math.floor(
-                  (s - sg) / math.sqrt(vn / 18.0) * 1000000 + 0.5) / 1000000)
-              }
-            out += MkMark(typ, st.openDay, y, n, s, z)
-            st = MkState(Long.MinValue, 0L, n, s, counts)
+  def mannKendall(events: Dataset[Ev]): Dataset[MkMark] =
+    dayCloseMonitor(events, MkState(0L, 0L, Map.empty)) {
+      (typ, x, y, st) => // fold the closing day into the statistic
+        val s = st.s + st.counts.iterator
+          .map { case (yo, t) => t * java.lang.Long.signum(y - yo) }.sum
+        val counts = st.counts.updated(y, st.counts.getOrElse(y, 0L) + 1L)
+        val n = st.n + 1
+        val tie = counts.valuesIterator
+          .map(t => t * (t - 1) * (2 * t + 5)).sum
+        val vn = n * (n - 1) * (2 * n + 5) - tie
+        // the batch z tree, mirrored: continuity-corrected normal
+        // approximation on exact int64 (S, Var·18), r6 at the end
+        val z =
+          if (vn <= 0) None
+          else {
+            val sg = java.lang.Long.signum(s).toLong
+            Some(r6((s - sg) / math.sqrt(vn / 18.0)))
           }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+        (MkState(n, s, counts), Some(MkMark(typ, x, y, n, s, z)))
+    }
 
   /** Streaming seasonal Mann–Kendall monitor (s_seasonal_mk) — the
     * incremental face of batch q_seasonal_mk: the MK sign statistic
@@ -636,57 +631,32 @@ object Streams {
     * type is the open day plus the per-(stratum, count) multiset of
     * closed days — 7× the [[mannKendall]] bound, still
     * calendar-bounded, never stream-length bounded. */
-  def seasonalMannKendall(events: Dataset[Ev]): Dataset[MkMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[SmkState, MkMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[SmkState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(
-            SmkState(Long.MinValue, 0L, 0L, 0L, Nil))
-          val out = Seq.newBuilder[MkMark]
-          def fold(): Unit = { // close the open day into ITS stratum
-            val k = st.openDay % 7
-            val y = st.openCount
-            val s = st.s + st.counts.iterator.filter(_.dow == k)
-              .map(c => c.t * java.lang.Long.signum(y - c.y)).sum
-            val counts =
-              if (st.counts.exists(c => c.dow == k && c.y == y))
-                st.counts.map(c =>
-                  if (c.dow == k && c.y == y) c.copy(t = c.t + 1) else c)
-              else st.counts :+ SmkCnt(k, y, 1L)
-            val n = st.n + 1
-            // 18·Var = Σ_k n_k(n_k−1)(2n_k+5) − Σ_{k,y} t(t−1)(2t+5)
-            val vraw = counts.groupBy(_.dow).valuesIterator
-              .map { cs => val nk = cs.iterator.map(_.t).sum
-                nk * (nk - 1) * (2 * nk + 5) }.sum
-            val tie = counts.iterator.map(c => c.t * (c.t - 1) * (2 * c.t + 5)).sum
-            val vn = vraw - tie
-            val z =
-              if (vn <= 0) None
-              else {
-                val sg = java.lang.Long.signum(s).toLong
-                Some(math.floor(
-                  (s - sg) / math.sqrt(vn / 18.0) * 1000000 + 0.5) / 1000000)
-              }
-            out += MkMark(typ, st.openDay, y, n, s, z)
-            st = SmkState(Long.MinValue, 0L, n, s, counts)
+  def seasonalMannKendall(events: Dataset[Ev]): Dataset[MkMark] =
+    dayCloseMonitor(events, SmkState(0L, 0L, Seq.empty)) {
+      (typ, x, y, st) => // fold the closing day into ITS stratum
+        val k = x % 7
+        val s = st.s + st.counts.iterator.filter(_.dow == k)
+          .map(c => c.t * java.lang.Long.signum(y - c.y)).sum
+        val counts =
+          if (st.counts.exists(c => c.dow == k && c.y == y))
+            st.counts.map(c =>
+              if (c.dow == k && c.y == y) c.copy(t = c.t + 1) else c)
+          else st.counts :+ SmkCnt(k, y, 1L)
+        val n = st.n + 1
+        // 18·Var = Σ_k n_k(n_k−1)(2n_k+5) − Σ_{k,y} t(t−1)(2t+5)
+        val vraw = counts.groupBy(_.dow).valuesIterator
+          .map { cs => val nk = cs.iterator.map(_.t).sum
+            nk * (nk - 1) * (2 * nk + 5) }.sum
+        val tie = counts.iterator.map(c => c.t * (c.t - 1) * (2 * c.t + 5)).sum
+        val vn = vraw - tie
+        val z =
+          if (vn <= 0) None
+          else {
+            val sg = java.lang.Long.signum(s).toLong
+            Some(r6((s - sg) / math.sqrt(vn / 18.0)))
           }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+        (SmkState(n, s, counts), Some(MkMark(typ, x, y, n, s, z)))
+    }
 
   /** Streaming Pettitt changepoint monitor (s_pettitt) — the
     * incremental face of batch q_pettitt: each day-close re-ranks the
@@ -701,261 +671,141 @@ object Streams {
     * frame, never the event stream. Strict > on |U| keeps the EARLIEST
     * break day (the batch (|U| DESC, x) tie-break); p_exponent =
     * 6K²/(n³+n²) stays transcendental-free on the shared r6 lattice. */
-  def pettitt(events: Dataset[Ev]): Dataset[PtMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PtState, PtMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[PtState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(PtState(Long.MinValue, 0L, Nil))
-          val out = Seq.newBuilder[PtMark]
-          def fold(): Unit = { // close the open day, re-rank, walk U_t
-            val closed = st.days :+ PtDay(st.openDay, st.openCount)
-            val n = closed.size.toLong
-            val cnt = closed.groupBy(_.y).view.mapValues(_.size.toLong).toMap
-            // competition-rank ints: r2(y) = 2·(#less) + #same + 1
-            //                              = 2·rank + #same − 1
-            val less = {
-              var acc = 0L
-              cnt.keys.toSeq.sorted.map { y => val l = acc; acc += cnt(y); y -> l }.toMap
-            }
-            var run = 0L; var best = 0L; var bestDay = closed.head.x; var t = 0L
-            closed.foreach { p =>
-              run += 2 * less(p.y) + cnt(p.y) + 1
-              t += 1
-              val ut = run - t * (n + 1)
-              if (math.abs(ut) > best) { best = math.abs(ut); bestDay = p.x }
-            }
-            val pexp =
-              if (n >= 2)
-                Some(math.floor(6.0 * best * best /
-                  (n.toDouble * n * n + n.toDouble * n) * 1000000 + 0.5) / 1000000)
-              else None
-            out += PtMark(typ, st.openDay, st.openCount, n, best, bestDay, pexp)
-            st = PtState(Long.MinValue, 0L, closed)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+  def pettitt(events: Dataset[Ev]): Dataset[PtMark] =
+    dayCloseMonitor(events, Seq.empty[PtDay]) {
+      (typ, x, y, days) => // append the closing day, re-rank, walk U_t
+        val closed = days :+ PtDay(x, y)
+        val n = closed.size.toLong
+        val cnt = closed.groupBy(_.y).view.mapValues(_.size.toLong).toMap
+        // competition-rank ints: r2(y) = 2·(#less) + #same + 1
+        //                              = 2·rank + #same − 1
+        val less = {
+          var acc = 0L
+          cnt.keys.toSeq.sorted.map { v => val l = acc; acc += cnt(v); v -> l }.toMap
+        }
+        var run = 0L; var best = 0L; var bestDay = closed.head.x; var t = 0L
+        closed.foreach { p =>
+          run += 2 * less(p.y) + cnt(p.y) + 1
+          t += 1
+          val ut = run - t * (n + 1)
+          if (math.abs(ut) > best) { best = math.abs(ut); bestDay = p.x }
+        }
+        val pexp =
+          if (n >= 2)
+            Some(r6(6.0 * best * best / (n.toDouble * n * n + n.toDouble * n)))
+          else None
+        (closed, Some(PtMark(typ, x, y, n, best, bestDay, pexp)))
+    }
 
   /** Streaming Durbin–Watson monitor (s_durbin_watson) — the
     * incremental face of batch q_durbin_watson, and the counterpoint
     * to [[pettitt]]'s series-valued state: because the batch op
     * collapses DW onto moment sums and LAG-DIFF sums, every statistic
-    * here is MERGEABLE — state per type is thirteen longs (the open
-    * day, the last CLOSED (day, count) pair, six moment sums, three
-    * diff sums) no matter how many days close. Each fold adds the
+    * here is MERGEABLE — state per type is the open pair plus eleven
+    * longs (the last CLOSED (day, count) pair, n, five moment sums,
+    * three diff sums) no matter how many days close. Each fold adds the
     * closing day to the moments, accumulates (Δy, Δx) products
     * against the previous closed day, and emits the running
     * (slope, DW, rho1) profile through the exact batch tree —
     * identical doubles from identical int64, NULL until n ≥ 3 and the
     * fit is non-degenerate. */
-  def durbinWatson(events: Dataset[Ev]): Dataset[DwMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[DwState, DwMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[DwState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(DwState(Long.MinValue, 0L,
-            Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
-          val out = Seq.newBuilder[DwMark]
-          def fold(): Unit = { // close the open day into the sums
-            val x = st.openDay; val y = st.openCount
-            val (suu, suv, svv) =
-              if (st.lastX == Long.MinValue) (st.suu, st.suv, st.svv)
-              else {
-                val u = y - st.lastY; val v = x - st.lastX
-                (st.suu + u * u, st.suv + u * v, st.svv + v * v)
-              }
-            val n = st.n + 1
-            val sx = st.sx + x; val sy = st.sy + y
-            val sxx = st.sxx + x * x; val sxy = st.sxy + x * y
-            val syy = st.syy + y * y
-            // the exact batch tree on the int64 moments
-            val bxx = (n * sxx - sx * sx).toDouble
-            val bxy = (n * sxy - sx * sy).toDouble
-            val byy = (n * syy - sy * sy).toDouble
-            def r6(d: Double) = math.floor(d * 1000000 + 0.5) / 1000000
-            val ok = n >= 3 && bxx > 0
-            val b = bxy / bxx
-            val sse = byy - b * bxy
-            val dw = n * (suu - 2 * b * suv + b * b * svv) / sse
-            out += DwMark(typ, x, y, n,
-              if (ok) Some(r6(b)) else None,
-              if (ok && sse > 0) Some(r6(dw)) else None,
-              if (ok && sse > 0) Some(r6(1 - dw / 2)) else None)
-            st = DwState(Long.MinValue, 0L, x, y, n, sx, sy, sxx, sxy, syy,
-              suu, suv, svv)
+  def durbinWatson(events: Dataset[Ev]): Dataset[DwMark] =
+    dayCloseMonitor(events,
+      DwState(Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)) {
+      (typ, x, y, st) => // fold the closing day into the sums
+        val (suu, suv, svv) =
+          if (st.lastX == Long.MinValue) (st.suu, st.suv, st.svv)
+          else {
+            val u = y - st.lastY; val v = x - st.lastX
+            (st.suu + u * u, st.suv + u * v, st.svv + v * v)
           }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+        val n = st.n + 1
+        val sx = st.sx + x; val sy = st.sy + y
+        val sxx = st.sxx + x * x; val sxy = st.sxy + x * y
+        val syy = st.syy + y * y
+        // the exact batch tree on the int64 moments
+        val bxx = (n * sxx - sx * sx).toDouble
+        val bxy = (n * sxy - sx * sy).toDouble
+        val byy = (n * syy - sy * sy).toDouble
+        val ok = n >= 3 && bxx > 0
+        val b = bxy / bxx
+        val sse = byy - b * bxy
+        val dw = n * (suu - 2 * b * suv + b * b * svv) / sse
+        (DwState(x, y, n, sx, sy, sxx, sxy, syy, suu, suv, svv),
+          Some(DwMark(typ, x, y, n,
+            if (ok) Some(r6(b)) else None,
+            if (ok && sse > 0) Some(r6(dw)) else None,
+            if (ok && sse > 0) Some(r6(1 - dw / 2)) else None)))
+    }
 
   /** Streaming Wald–Wolfowitz runs monitor (s_runs_test) — the
     * incremental face of batch q_runs_test: the sign sequence folds
     * LEFT-TO-RIGHT (each closed day compares only against the
     * immediately previous closed count, and a run breaks only against
-    * the previous SIGN), so the state is SEVEN longs per type — the
-    * open pair, the last closed count, the last sign, and the three
+    * the previous SIGN), so the state per type is the open pair plus
+    * FIVE longs — the last closed count, the last sign, and the three
     * run counters — fully mergeable forever, the s_durbin_watson
     * counterpoint to the series-state family. Equal-count days drop
     * (no sign) exactly as in batch. */
-  def runsTest(events: Dataset[Ev]): Dataset[RunsMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[RunsState, RunsMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[RunsState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(
-            RunsState(Long.MinValue, 0L, Long.MinValue, 0L, 0L, 0L, 0L))
-          val out = Seq.newBuilder[RunsMark]
-          def r6(d: Double) = math.floor(d * 1000000 + 0.5) / 1000000
-          def fold(): Unit = { // close the open day into the sign walk
-            val y = st.openCount
-            var (nu, nd, nr, sg) = (st.nUp, st.nDown, st.nRuns, st.lastSg)
-            if (st.lastY != Long.MinValue && y != st.lastY) {
-              val s = if (y > st.lastY) 1L else -1L
-              if (s == 1L) nu += 1 else nd += 1
-              if (sg == 0L || s != sg) nr += 1
-              sg = s
-            }
-            val n = nu + nd
-            val z =
-              if (nu > 0 && nd > 0)
-                Some(r6((nr - (2.0 * nu * nd / n + 1)) /
-                  math.sqrt(2.0 * nu * nd * (2.0 * nu * nd - n) /
-                    (n.toDouble * n * (n - 1)))))
-              else None
-            out += RunsMark(typ, st.openDay, y, nu, nd, nr, z)
-            st = RunsState(Long.MinValue, 0L, y, sg, nu, nd, nr)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+  def runsTest(events: Dataset[Ev]): Dataset[RunsMark] =
+    dayCloseMonitor(events, RunsState(Long.MinValue, 0L, 0L, 0L, 0L)) {
+      (typ, x, y, st) => // fold the closing day into the sign walk
+        var (nu, nd, nr, sg) = (st.nUp, st.nDown, st.nRuns, st.lastSg)
+        if (st.lastY != Long.MinValue && y != st.lastY) {
+          val s = if (y > st.lastY) 1L else -1L
+          if (s == 1L) nu += 1 else nd += 1
+          if (sg == 0L || s != sg) nr += 1
+          sg = s
+        }
+        val n = nu + nd
+        val z =
+          if (nu > 0 && nd > 0)
+            Some(r6((nr - (2.0 * nu * nd / n + 1)) /
+              math.sqrt(2.0 * nu * nd * (2.0 * nu * nd - n) /
+                (n.toDouble * n * (n - 1)))))
+          else None
+        (RunsState(y, sg, nu, nd, nr), Some(RunsMark(typ, x, y, nu, nd, nr, z)))
+    }
 
   /** Streaming turning-points monitor (s_turning_points) — the
     * incremental face of batch q_turning_points: a day's peak/valley
     * verdict is final only when its SUCCESSOR closes, so each fold
     * adjudicates the PREVIOUS closed day against its two neighbours.
-    * State is SIX longs per type (open pair, the last two closed
-    * counts, the day and turn counters) — fully mergeable forever. */
-  def turningPoints(events: Dataset[Ev]): Dataset[TurnMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[TurnState, TurnMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[TurnState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(
-            TurnState(Long.MinValue, 0L, Long.MinValue, Long.MinValue, 0L, 0L))
-          val out = Seq.newBuilder[TurnMark]
-          def r6(d: Double) = math.floor(d * 1000000 + 0.5) / 1000000
-          def fold(): Unit = { // close the open day; adjudicate prev1
-            val y = st.openCount
-            val n = st.nDays + 1
-            val turns = st.nTurning + (
-              if (st.prev2 != Long.MinValue &&
-                ((st.prev1 > st.prev2 && st.prev1 > y) ||
-                  (st.prev1 < st.prev2 && st.prev1 < y))) 1L else 0L)
-            val z =
-              if (n >= 3)
-                Some(r6((turns - 2.0 * (n - 2) / 3) /
-                  math.sqrt((16.0 * n - 29) / 90)))
-              else None
-            out += TurnMark(typ, st.openDay, y, n, turns,
-              r6(2.0 * (n - 2) / 3), z)
-            st = TurnState(Long.MinValue, 0L, y, st.prev1, n, turns)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+    * State per type is the open pair plus FOUR longs (the last two
+    * closed counts, the day and turn counters) — fully mergeable
+    * forever. */
+  def turningPoints(events: Dataset[Ev]): Dataset[TurnMark] =
+    dayCloseMonitor(events, TurnState(Long.MinValue, Long.MinValue, 0L, 0L)) {
+      (typ, x, y, st) => // fold the closing day; adjudicate prev1
+        val n = st.nDays + 1
+        val turns = st.nTurning + (
+          if (st.prev2 != Long.MinValue &&
+            ((st.prev1 > st.prev2 && st.prev1 > y) ||
+              (st.prev1 < st.prev2 && st.prev1 < y))) 1L else 0L)
+        val z =
+          if (n >= 3)
+            Some(r6((turns - 2.0 * (n - 2) / 3) /
+              math.sqrt((16.0 * n - 29) / 90)))
+          else None
+        (TurnState(y, st.prev1, n, turns),
+          Some(TurnMark(typ, x, y, n, turns, r6(2.0 * (n - 2) / 3), z)))
+    }
 
   /** Streaming Poisson-dispersion monitor (s_poisson_dispersion) — the
     * incremental face of batch q_poisson_dispersion: the variance/mean
-    * index collapses onto three moment sums, so the state is FIVE
-    * longs per type, mergeable forever; each day-close walks the exact
+    * index collapses onto three moment sums, so the state per type is
+    * the open pair plus THREE longs, mergeable forever; each day-close walks the exact
     * batch tree on the int64 moments. */
-  def poissonDispersion(events: Dataset[Ev]): Dataset[PoisMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PoisState, PoisMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[PoisState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(PoisState(Long.MinValue, 0L, 0L, 0L, 0L))
-          val out = Seq.newBuilder[PoisMark]
-          def r6(d: Double) = math.floor(d * 1000000 + 0.5) / 1000000
-          def fold(): Unit = { // close the open day into the moments
-            val y = st.openCount
-            val n = st.n + 1; val s = st.s + y; val ss = st.ss + y * y
-            val b = n * ss.toDouble - s.toDouble * s
-            val ok = s > 0 && n >= 2
-            out += PoisMark(typ, st.openDay, y, n, r6(s.toDouble / n),
-              if (ok) Some(r6(b / (s.toDouble * (n - 1)))) else None,
-              if (ok) Some(r6(b / s.toDouble)) else None)
-            st = PoisState(Long.MinValue, 0L, n, s, ss)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+  def poissonDispersion(events: Dataset[Ev]): Dataset[PoisMark] =
+    dayCloseMonitor(events, PoisState(0L, 0L, 0L)) {
+      (typ, x, y, st) => // fold the closing day into the moments
+        val n = st.n + 1; val s = st.s + y; val ss = st.ss + y * y
+        val b = n * ss.toDouble - s.toDouble * s
+        val ok = s > 0 && n >= 2
+        (PoisState(n, s, ss), Some(PoisMark(typ, x, y, n, r6(s.toDouble / n),
+          if (ok) Some(r6(b / (s.toDouble * (n - 1)))) else None,
+          if (ok) Some(r6(b / s.toDouble)) else None)))
+    }
 
   /** Streaming Grubbs monitor (s_grubbs) — the incremental face of
     * batch q_grubbs. The outlier day is the argmax of |n·y − s| under
@@ -964,48 +814,25 @@ object Streams {
     * count) series (daily-frame-bounded) and each fold re-scans it
     * through the exact batch tree — int64 deviations, the earliest-day
     * argmax tie-break, g on the shared population-variance form. */
-  def grubbs(events: Dataset[Ev]): Dataset[GrubbsMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PtState, GrubbsMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[PtState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(PtState(Long.MinValue, 0L, Nil))
-          val out = Seq.newBuilder[GrubbsMark]
-          def r6(d: Double) = math.floor(d * 1000000 + 0.5) / 1000000
-          def fold(): Unit = { // close the open day, re-elect the outlier
-            val closed = st.days :+ PtDay(st.openDay, st.openCount)
-            val n = closed.size.toLong
-            val s = closed.iterator.map(_.y).sum
-            val ss = closed.iterator.map(p => p.y * p.y).sum
-            // argmax |n·y − s|, earliest day breaking ties — the exact
-            // batch row_number() ORDER BY (a DESC, x)
-            val best = closed.minBy(p => (-math.abs(n * p.y - s), p.x))
-            val a = math.abs(n * best.y - s)
-            val g =
-              if (n >= 2 && n * ss > s * s)
-                Some(r6(a.toDouble / (n *
-                  math.sqrt((n * ss.toDouble - s.toDouble * s) /
-                    (n.toDouble * (n - 1))))))
-              else None
-            out += GrubbsMark(typ, st.openDay, st.openCount, n, best.x, best.y, g)
-            st = PtState(Long.MinValue, 0L, closed)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+  def grubbs(events: Dataset[Ev]): Dataset[GrubbsMark] =
+    dayCloseMonitor(events, Seq.empty[PtDay]) {
+      (typ, x, y, days) => // append the closing day, re-elect the outlier
+        val closed = days :+ PtDay(x, y)
+        val n = closed.size.toLong
+        val s = closed.iterator.map(_.y).sum
+        val ss = closed.iterator.map(p => p.y * p.y).sum
+        // argmax |n·y − s|, earliest day breaking ties — the exact
+        // batch row_number() ORDER BY (a DESC, x)
+        val best = closed.minBy(p => (-math.abs(n * p.y - s), p.x))
+        val a = math.abs(n * best.y - s)
+        val g =
+          if (n >= 2 && n * ss > s * s)
+            Some(r6(a.toDouble / (n *
+              math.sqrt((n * ss.toDouble - s.toDouble * s) /
+                (n.toDouble * (n - 1))))))
+          else None
+        (closed, Some(GrubbsMark(typ, x, y, n, best.x, best.y, g)))
+    }
 
   /** Streaming Tukey HSD stats grid (s_tukey_hsd) — the streaming face
     * of batch q_tukey_hsd, split the s_cat_entropy way: the stream
@@ -1021,10 +848,6 @@ object Streams {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("v").as("s"),
         sum(col("v") * col("v")).as("ss"))
-
-  /** Read-time Tukey HSD projection over a [[tukeyStats]] grid. */
-  def tukeyOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.tukeyOf(grid)
 
   /** Streaming Cohen's-kappa cell grid (s_cohens_kappa) — the
     * incremental face of batch q_cohens_kappa: each arriving document
@@ -1046,10 +869,6 @@ object Streams {
       .groupBy("true_lang", "pred_lang")
       .agg(count(lit(1)).as("n"))
 
-  /** Read-time Cohen's-kappa projection over a [[kappaCells]] grid. */
-  def kappaOf(grid: DataFrame): DataFrame =
-    graft.ops.Diagnostics.kappaOf(grid)
-
   /** Streaming pooled-rank value grid (s_rank_grid) — ONE mergeable
     * (type, cents, count) grid serving THREE read-time screens
     * (s_kruskal_wallis, s_dunn, s_jonckheere): each arriving event's
@@ -1067,16 +886,6 @@ object Streams {
       .groupBy("g", "v100")
       .agg(count(lit(1)).as("c"))
 
-  /** Read-time Kruskal–Wallis projection over a [[rankGrid]]. */
-  def kruskalWallisOf(grid: DataFrame): DataFrame =
-    graft.ops.Statistics.kruskalWallisOf(grid)
-
-  /** Read-time isotonic-calibration projection over a [[rankGrid]] —
-    * a new event shifts its band's rate and every minimax interval
-    * through it; the grid is the mergeable state (s_isotonic). */
-  def isotonicOf(grid: DataFrame): DataFrame =
-    graft.ops.Ranking.isotonicOf(grid)
-
   /** Read-time 1-D k-means projection over a [[rankGrid]] — the
     * purchase slice of the grid is the (v, c) domain frame; every
     * arriving purchase re-prices the Lloyd rounds (s_kmeans_1d). */
@@ -1087,12 +896,6 @@ object Streams {
     * (s_gmm_em). */
   def gmmEmOf(grid: DataFrame): DataFrame =
     graft.ops.Mixture.gmmOf(purchaseSlice(grid))
-
-  /** Read-time 1-D logistic-fit projection over a [[rankGrid]] —
-    * every arriving event shifts its cell and re-prices all three
-    * IRLS steps (s_logistic_1d). */
-  def logistic1dOf(grid: DataFrame): DataFrame =
-    graft.ops.Mixture.logisticOf(grid)
 
   /** Read-time Huber-location projection over a [[rankGrid]] — a new
     * event shifts its type's median, MAD and every IRLS weight, so the
@@ -1110,12 +913,6 @@ object Streams {
       .groupBy(col("lang"), least(length(col("tok")), lit(15)).as("wlen"))
       .agg(count(lit(1)).as("n"), sum(length(col("tok"))).as("chars"))
 
-  /** Read-time word-length profile projection over a [[wordLenGrid]]
-    * — every share re-normalizes as any band's count grows; the band
-    * grid is the mergeable state (s_word_len_hist). */
-  def wordLenOf(grid: DataFrame): DataFrame =
-    graft.ops.Lexicon.wordLenOf(grid)
-
   /** Streaming audio feature grid — clips arrive as raw event rows,
     * decode through the SAME WAV codec batch path (stream-compatible
     * map-only), and fold into the |types|-bounded (n_clips, rate,
@@ -1124,23 +921,12 @@ object Streams {
   def audioGrid(in: org.apache.spark.sql.Dataset[(Long, String, Long)]): DataFrame =
     graft.ops.Multimodal.audioGridOf(graft.ops.Multimodal.clipStream(in))
 
-  /** Read-time audio feature readout over an [[audioGrid]] — the mean
-    * ZCR/energy divisions re-normalize as any type's cell grows
-    * (s_audio_features). */
-  def audioFeaturesOf(grid: DataFrame): DataFrame =
-    graft.ops.Multimodal.audioFeaturesOf(grid)
-
   /** Streaming audio fingerprint collision grid — the same in-stream
     * WAV decode as [[audioGrid]], folded onto the synthesis-bounded
     * (type, fingerprint) cells behind the s_audio_fingerprint
     * read-time face. */
   def audioFpGrid(in: org.apache.spark.sql.Dataset[(Long, String, Long)]): DataFrame =
     graft.ops.Multimodal.audioFpGridOf(graft.ops.Multimodal.clipStream(in))
-
-  /** Read-time collision readout over an [[audioFpGrid]]
-    * (s_audio_fingerprint). */
-  def audioFingerprintOf(grid: DataFrame): DataFrame =
-    graft.ops.Multimodal.audioFingerprintOf(grid)
 
   /** Streaming video feed-profile grid — clips arrive as (doc_id,
     * source) rows, synth + REAL GIF87a LZW decode ride the stream
@@ -1150,24 +936,11 @@ object Streams {
   def videoGrid(in: org.apache.spark.sql.Dataset[(Long, String)]): DataFrame =
     graft.ops.Multimodal.videoGridOf(graft.ops.Multimodal.videoClipStream(in))
 
-  /** Read-time video profile readout over a [[videoGrid]]
-    * (s_video_profile). */
-  def videoProfileOf(grid: DataFrame): DataFrame =
-    graft.ops.Multimodal.videoProfileOf(grid)
-
   /** The purchase (v, c) slice of a [[rankGrid]] — the mixture
     * models' bounded domain frame. */
   private def purchaseSlice(grid: DataFrame): DataFrame =
     grid.filter(col("g") === "purchase")
       .groupBy(col("v100").as("v")).agg(sum("c").as("c"))
-
-  /** Read-time Dunn post-hoc projection over a [[rankGrid]]. */
-  def dunnOf(grid: DataFrame): DataFrame =
-    graft.ops.Statistics.dunnOf(grid)
-
-  /** Read-time Jonckheere–Terpstra projection over a [[rankGrid]]. */
-  def jonckheereOf(grid: DataFrame): DataFrame =
-    graft.ops.Statistics.jonckheereOf(grid)
 
   /** Streaming daily count grid — the mergeable (event_type, x, y)
     * state behind the s_moods_median and s_friedman read-time faces:
@@ -1184,210 +957,6 @@ object Streams {
       .groupBy(col("event_type"), graft.ops.Inference.dayIndexCol.as("x"))
       .agg(count(lit(1)).as("y"))
 
-  /** Read-time Wald-SPRT projection over a [[dailyGrid]] — the
-    * sequential decision re-prices from day one at every close; the
-    * grid is the mergeable state. */
-  def sprtOf(grid: DataFrame): DataFrame = graft.ops.Inference.sprtOf(grid)
-
-  /** Read-time matrix-profile projection over a [[dailyGrid]] — a new
-    * day shifts every window's nearest neighbor, so motif/discord
-    * re-price at read time; the grid is the mergeable state
-    * (s_matrix_profile). */
-  def matrixProfileOf(grid: DataFrame): DataFrame =
-    graft.ops.Inference.matrixProfileOf(grid)
-
-  /** Read-time Kendall's-W projection over a [[dailyGrid]] — the
-    * concordance re-prices globally as days close; the grid is the
-    * mergeable state (s_kendall_w). */
-  def kendallWOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.kendallWOf(grid)
-
-  /** Read-time burst-filter projection over a [[dailyGrid]] — a
-    * closing day re-prices λ and the whole cost recursion; the grid
-    * is the mergeable state (s_burst_detect). */
-  def burstDetectOf(grid: DataFrame): DataFrame =
-    graft.ops.Inference.burstDetectOf(grid)
-
-  /** Read-time sample-entropy projection over a [[dailyGrid]] — a new
-    * day shifts σ and every template comparison; the grid is the
-    * mergeable state (s_sampen). */
-  def sampenOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.sampenOf(grid)
-
-  /** Read-time theta-forecast projection over a [[dailyGrid]] — a new
-    * day re-fits the trend and re-runs the SES recursion; the grid is
-    * the mergeable state (s_theta_forecast). */
-  def thetaForecastOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.thetaForecastOf(grid)
-
-  /** Read-time rolling-origin backtest projection over a [[dailyGrid]]
-    * — a closing day appends one eval row per type and can flip the
-    * winner; the grid is the mergeable state (s_backtest_naive). */
-  def backtestNaiveOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.backtestNaiveOf(grid)
-
-  /** Read-time MACD projection over a [[dailyGrid]] — a new day
-    * extends the twin-EMA and signal recursions; the grid is the
-    * mergeable state (s_macd). */
-  def macdOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.macdOf(grid)
-
-  /** Read-time 3σ-clip projection over a [[dailyGrid]] — a closing
-    * day re-prices every round's survivor set; the grid is the
-    * mergeable state (s_sigma_clip). */
-  def sigmaClipOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.sigmaClipOf(grid)
-
-  /** Read-time banded-DTW projection over a [[dailyGrid]] — a new day
-    * extends every pair's DP band; the grid is the mergeable state
-    * (s_dtw). */
-  def dtwOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.dtwOf(grid)
-
-  /** Read-time Haar-energy projection over a [[dailyGrid]] — a new
-    * day shifts its block's coefficient at every scale; the grid is
-    * the mergeable state (s_haar_energy). */
-  def haarEnergyOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.haarEnergyOf(grid)
-
-  /** Read-time LOESS projection over a [[dailyGrid]] — a new day
-    * re-fits its ±7-day neighborhood; the grid is the mergeable state
-    * (s_loess_trend). */
-  def loessTrendOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.loessTrendOf(grid)
-
-  /** Read-time naive-forecast-interval projection over a [[dailyGrid]]
-    * — a closing day appends one residual and can shift both
-    * crossings; the grid is the mergeable state (s_forecast_interval). */
-  def forecastIntervalOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.forecastIntervalOf(grid)
-
-  /** Read-time classical-decomposition projection over a [[dailyGrid]]. */
-  def decomposeOf(grid: DataFrame): DataFrame =
-    graft.ops.Timeseries.decomposeOf(grid)
-
-  /** Read-time STL-strength projection over a [[dailyGrid]]. */
-  def seasonalStrengthOf(grid: DataFrame): DataFrame =
-    graft.ops.Timeseries.seasonalStrengthOf(grid)
-
-  /** Read-time MAD-fence seasonal-anomaly projection over a
-    * [[dailyGrid]]. */
-  def seasonalAnomalyOf(grid: DataFrame): DataFrame =
-    graft.ops.Timeseries.seasonalAnomalyOf(grid)
-
-  /** Read-time OLS trend projection over a [[dailyGrid]]. */
-  def trendFitOf(grid: DataFrame): DataFrame =
-    graft.ops.Statistics.trendFitOf(grid)
-
-  /** Read-time AR(1) projection over a [[dailyGrid]]. */
-  def ar1Of(grid: DataFrame): DataFrame = graft.ops.Inference.ar1Of(grid)
-
-  /** Read-time mean-split changepoint projection over a [[dailyGrid]]. */
-  def changepointOf(grid: DataFrame): DataFrame =
-    graft.ops.Inference.changepointOf(grid)
-
-  /** Read-time paired-t projection over a [[dailyGrid]]. */
-  def pairedTOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.pairedTOf(grid)
-
-  /** Read-time CUSUM projection over a [[dailyGrid]] — the max
-    * deviation re-prices every prefix at each day-close; the grid is
-    * the mergeable state. */
-  def cusumOf(grid: DataFrame): DataFrame = graft.ops.Timeseries.cusumOf(grid)
-
-  /** Read-time EWMA projection over a [[dailyGrid]]. */
-  def ewmaOf(grid: DataFrame): DataFrame = graft.ops.Timeseries.ewmaOf(grid)
-
-  /** Read-time ACF projection over a [[dailyGrid]]. */
-  def acfOf(grid: DataFrame): DataFrame = graft.ops.Timeseries.acfOf(grid)
-
-  /** Read-time periodogram projection over a [[dailyGrid]] — the
-    * spectrum is not mergeable (a new day shifts every residue-class
-    * sum); the daily grid is. */
-  def periodogramOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.periodogramOf(grid)
-
-  /** Read-time Mood's-median projection over a [[dailyGrid]]. */
-  def moodsMedianOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.moodsMedianOf(grid)
-
-  /** Read-time Friedman projection over a [[dailyGrid]]. */
-  def friedmanOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.friedmanOf(grid)
-
-  /** Read-time Nemenyi post-hoc projection over a [[dailyGrid]]. */
-  def nemenyiOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.nemenyiOf(grid)
-
-  /** Read-time Wilcoxon signed-rank projection over a [[dailyGrid]]. */
-  def wilcoxonOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.wilcoxonOf(grid)
-
-  /** Read-time Ansari–Bradley projection over the [[ksCells]] grid —
-    * the scale test re-ranks every tie run as cells arrive; the
-    * (v100, c1, c2) grid is the mergeable state (s_ansari_bradley). */
-  def abOf(grid: DataFrame): DataFrame = graft.ops.Statistics.abOf(grid)
-
-  /** Read-time Brunner–Munzel projection over the [[ksCells]] grid —
-    * both rank layers re-price as cells arrive; the (v100, c1, c2)
-    * grid is the mergeable state (s_brunner_munzel). */
-  def bmOf(grid: DataFrame): DataFrame = graft.ops.Statistics.bmOf(grid)
-
-  /** Read-time Quade projection over a [[dailyGrid]] — a new day
-    * re-weights every block (its range enters the day ranking); the
-    * grid is the mergeable state (s_quade). */
-  def quadeOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.quadeOf(grid)
-
-  /** Read-time Yule–Walker AR(2) projection over a [[dailyGrid]] — a
-    * new day shifts every lag cross-sum; the grid is the mergeable
-    * state (s_yule_walker). */
-  def yuleWalkerOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.yuleWalkerOf(grid)
-
-  /** Read-time spectral-entropy projection over a [[dailyGrid]] — the
-    * spectrum is not mergeable (a new day shifts every residue-class
-    * sum); the grid is (s_spectral_entropy). */
-  def spectralEntropyOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.spectralEntropyOf(grid)
-
-  /** Read-time Cronbach-alpha projection over a [[dailyGrid]] — a new
-    * day shifts every item variance and the day-total variance; the
-    * grid is the mergeable state (s_cronbach_alpha). */
-  def cronbachOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.cronbachOf(grid)
-
-  /** Read-time ICC(1,1) projection over a [[dailyGrid]] — a new day
-    * shifts both mean squares; the grid is the mergeable state
-    * (s_icc). */
-  def iccOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.iccOf(grid)
-
-  /** Read-time permutation-entropy projection over a [[dailyGrid]] —
-    * a new day creates new ordinal triples and re-normalizes every
-    * pattern share; the grid is the mergeable state (s_perm_entropy). */
-  def permEntropyOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.permEntropyOf(grid)
-
-  /** Read-time Cox–Stuart trend projection over a [[dailyGrid]] — a
-    * closing day moves the pair offset ⌈n/2⌉ and re-pairs the whole
-    * series, so the sign test re-prices at read time; the daily grid
-    * is the mergeable state (s_cox_stuart). */
-  def coxStuartOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.coxStuartOf(grid)
-
-  /** Read-time Bartels rank-von-Neumann projection over a
-    * [[dailyGrid]] — a new day re-ranks the series; the daily grid is
-    * the mergeable state (s_bartels_rank). */
-  def bartelsOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.bartelsOf(grid)
-
-  /** Read-time pinball-loss projection over a [[dailyGrid]] — a
-    * closing day adds one naive-forecast residual; the daily grid is
-    * the mergeable state (s_pinball). */
-  def pinballOf(grid: DataFrame): DataFrame =
-    graft.ops.SeriesTests.pinballOf(grid)
-
   /** Streaming hourly count grid — the mergeable (type, day, hour,
     * count) state behind the s_gumbel_maxima read-time face: a plain
     * streaming groupBy on the batch day index + hour, bounded by
@@ -1401,16 +970,6 @@ object Streams {
       .groupBy(col("event_type"), graft.ops.Inference.dayIndexCol.as("x"),
         hour(col("ts")).cast("long").as("hh"))
       .agg(count(lit(1)).as("c"))
-
-  /** Read-time Gumbel block-maxima projection over an [[hourlyGrid]]. */
-  def gumbelOf(grid: DataFrame): DataFrame =
-    graft.ops.Timeseries.gumbelOf(grid)
-
-  /** Read-time diurnal-profile projection over an [[hourlyGrid]] —
-    * the shares re-normalize as any hour's count grows; the grid is
-    * the mergeable state (s_diurnal). */
-  def diurnalOf(grid: DataFrame): DataFrame =
-    graft.ops.Analytics.diurnalOf(grid)
 
   /** Streaming per-user lifetime frame — the mergeable (user_id, fs,
     * ls) state behind the three survival read-time faces
@@ -1443,55 +1002,6 @@ object Streams {
         when(col("event_type") === "click", 1L).otherwise(0L).as("g2"))
       .groupBy("v100")
       .agg(sum("g1").as("c1"), sum("g2").as("c2"))
-
-  /** Read-time Kolmogorov–Smirnov projection over a [[ksCells]] grid. */
-  def ksOf(grid: DataFrame): DataFrame = graft.ops.Statistics.ksOf(grid)
-
-  /** Read-time Cramér–von Mises projection over a [[ksCells]] grid. */
-  def cvmOf(grid: DataFrame): DataFrame = graft.ops.Statistics.cvmOf(grid)
-
-  /** Read-time 1-D Wasserstein projection over a [[ksCells]] grid. */
-  def w1Of(grid: DataFrame): DataFrame = graft.ops.Statistics.w1Of(grid)
-
-  /** Read-time Anderson–Darling projection over a [[ksCells]] grid. */
-  def adOf(grid: DataFrame): DataFrame = graft.ops.Statistics.adOf(grid)
-
-  /** Read-time Cliff's-delta projection over a [[ksCells]] grid. */
-  def cliffsOf(grid: DataFrame): DataFrame = graft.ops.Statistics.cliffsOf(grid)
-
-  /** Read-time Mann–Whitney projection over a [[ksCells]] grid. */
-  def mwOf(grid: DataFrame): DataFrame = graft.ops.Statistics.mwOf(grid)
-
-  /** Read-time power-analysis projection over a [[ksCells]] grid. */
-  def powerOf(grid: DataFrame): DataFrame = graft.ops.Statistics.powerOf(grid)
-
-  /** Read-time Hellinger projection over a [[ksCells]] grid. */
-  def hellingerOf(grid: DataFrame): DataFrame = graft.ops.Statistics.hellingerOf(grid)
-
-  /** Read-time energy-distance projection over a [[ksCells]] grid. */
-  def energyOf(grid: DataFrame): DataFrame = graft.ops.Statistics.energyOf(grid)
-
-  /** Read-time exact-AUC projection over a [[ksCells]] grid (the
-    * Mann–Whitney machinery normalized — s_auc_roc). */
-  def aucOf(grid: DataFrame): DataFrame = graft.ops.Statistics.aucOf(grid)
-
-  /** Read-time average-precision projection over a [[ksCells]] grid
-    * (s_pr_auc). */
-  def prAucOf(grid: DataFrame): DataFrame = graft.ops.Statistics.prAucOf(grid)
-
-  /** Read-time Brier-decomposition projection over a [[ksCells]] grid
-    * (s_brier). */
-  def brierOf(grid: DataFrame): DataFrame = graft.ops.Statistics.brierOf(grid)
-
-  /** Read-time reliability-table/ECE projection over a [[ksCells]]
-    * grid (s_calibration). */
-  def calibrationOf(grid: DataFrame): DataFrame =
-    graft.ops.Statistics.calibrationOf(grid)
-
-  /** Read-time confusion-matrix projection over a [[ksCells]] grid
-    * (s_confusion). */
-  def confusionOf(grid: DataFrame): DataFrame =
-    graft.ops.Statistics.confusionOf(grid)
 
   /** Streaming per-column completeness counters over the events feed
     * (s_completeness) — the state is ONE global row of int64
@@ -1528,10 +1038,6 @@ object Streams {
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n"), sum("y").as("s"), sum(col("y") * col("y")).as("ss"))
 
-  /** Read-time target-encoding projection over a [[teCells]] grid. */
-  def targetEncodeOf(grid: DataFrame): DataFrame =
-    graft.ops.Analytics.targetEncodeOf(grid)
-
   /** Streaming part–supplier pair grid — the mergeable edge-set state
     * behind the s_hits read-time face: a plain streaming groupBy on
     * the (pk, sk) key (count irrelevant — key existence IS the
@@ -1553,11 +1059,6 @@ object Streams {
   def shardBytes(docs: DataFrame): DataFrame =
     graft.ops.Curation.shardBytes(docs)
 
-  /** Read-time next-fit compaction projection over a [[shardBytes]]
-    * grid. */
-  def compactionOf(grid: DataFrame): DataFrame =
-    graft.ops.Curation.compactionOf(grid)
-
   /** Streaming filter-cascade cell grid — the mergeable (content-hash,
     * flags) state behind the s_filter_cascade read-time face: three
     * in-row flags + md5, a plain streaming groupBy bounded by distinct
@@ -1566,9 +1067,6 @@ object Streams {
     * One home with batch q_filter_cascade (Curation.cascadeCells). */
   def cascadeCells(docs: DataFrame): DataFrame =
     graft.ops.Curation.cascadeCells(docs)
-
-  /** Read-time filter-cascade projection over a [[cascadeCells]] grid. */
-  def cascadeOf(grid: DataFrame): DataFrame = graft.ops.Curation.cascadeOf(grid)
 
   /** Streaming per-type value cents grid — the mergeable
     * (event_type, v100, c) state behind the s_trimmed_mean and
@@ -1580,22 +1078,6 @@ object Streams {
     events
       .select(col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("v100"))
       .groupBy("event_type", "v100").agg(count(lit(1)).as("c"))
-
-  /** Read-time trimmed-mean projection over a [[typeCents]] grid. */
-  def trimmedMeanOf(grid: DataFrame): DataFrame =
-    graft.ops.Analytics.trimmedMeanOf(grid)
-
-  /** Read-time Bowley-skew projection over a [[typeCents]] grid. */
-  def bowleyOf(grid: DataFrame): DataFrame = graft.ops.Analytics.bowleyOf(grid)
-
-  /** Read-time Kaplan–Meier projection over a [[userLifeGrid]]. */
-  def kmOf(grid: DataFrame): DataFrame = graft.ops.Timeseries.kmOf(grid)
-
-  /** Read-time Nelson–Aalen projection over a [[userLifeGrid]]. */
-  def naOf(grid: DataFrame): DataFrame = graft.ops.Timeseries.naOf(grid)
-
-  /** Read-time log-rank projection over a [[userLifeGrid]]. */
-  def logRankOf(grid: DataFrame): DataFrame = graft.ops.Timeseries.logRankOf(grid)
 
   /** Streaming token-budget quality grid (s_token_budget_trim) — the
     * incremental face of batch q_token_budget_trim: each arriving
@@ -1617,10 +1099,6 @@ object Streams {
       .groupBy("lang", "q4")
       .agg(count(lit(1)).as("docs"), sum("tok").as("toks"))
 
-  /** Read-time budget-trim projection over a [[trimGrid]]. */
-  def trimOf(grid: DataFrame): DataFrame =
-    graft.ops.Corpus.trimOf(grid)
-
   /** Streaming KPSS monitor (s_kpss) — the incremental face of batch
     * q_kpss. Every partial sum S_t is measured against the FINAL mean,
     * so each day-close re-prices the whole path: like [[pettitt]], the
@@ -1630,50 +1108,27 @@ object Streams {
     * data-scaled lattice divisor D = max(1, ⌊byy0/1e6⌋), the order-free
     * ⌊(nS)²/D⌉ sum, η = B·D/(n²·byy0) — so the running η profile is
     * bit-equal to what batch q_kpss reports over the closed prefix. */
-  def kpss(events: Dataset[Ev]): Dataset[KpssMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PtState, KpssMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[PtState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(PtState(Long.MinValue, 0L, Nil))
-          val out = Seq.newBuilder[KpssMark]
-          def fold(): Unit = { // close the open day, re-price the path
-            val closed = st.days :+ PtDay(st.openDay, st.openCount)
-            val n = closed.size.toLong
-            val sy = closed.iterator.map(_.y).sum
-            val syy = closed.iterator.map(p => p.y * p.y).sum
-            val byy0 = n * syy - sy * sy
-            val dd = math.max(1L, math.floor(byy0 / 1e6).toLong)
-            var cum = 0L; var t = 0L; var bsum = 0L
-            closed.foreach { p =>
-              cum += p.y; t += 1
-              val ns = n * cum - t * sy
-              bsum += math.floor(ns.toDouble * ns / dd + 0.5).toLong
-            }
-            val eta =
-              if (n >= 2 && byy0 > 0)
-                Some(math.floor(bsum.toDouble * dd /
-                  (n.toDouble * n * byy0) * 1000000 + 0.5) / 1000000)
-              else None
-            out += KpssMark(typ, st.openDay, st.openCount, n, eta)
-            st = PtState(Long.MinValue, 0L, closed)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+  def kpss(events: Dataset[Ev]): Dataset[KpssMark] =
+    dayCloseMonitor(events, Seq.empty[PtDay]) {
+      (typ, x, y, days) => // append the closing day, re-price the path
+        val closed = days :+ PtDay(x, y)
+        val n = closed.size.toLong
+        val sy = closed.iterator.map(_.y).sum
+        val syy = closed.iterator.map(p => p.y * p.y).sum
+        val byy0 = n * syy - sy * sy
+        val dd = math.max(1L, math.floor(byy0 / 1e6).toLong)
+        var cum = 0L; var t = 0L; var bsum = 0L
+        closed.foreach { p =>
+          cum += p.y; t += 1
+          val ns = n * cum - t * sy
+          bsum += math.floor(ns.toDouble * ns / dd + 0.5).toLong
+        }
+        val eta =
+          if (n >= 2 && byy0 > 0)
+            Some(r6(bsum.toDouble * dd / (n.toDouble * n * byy0)))
+          else None
+        (closed, Some(KpssMark(typ, x, y, n, eta)))
+    }
 
   /** Streaming Chow monitor (s_chow) — the incremental face of batch
     * q_chow: the mid-series split point MOVES with every closed day
@@ -1683,64 +1138,41 @@ object Streams {
     * shared q_cooks_distance identity, pooled = segment sums, explicit
     * two-operand double additions. The running (split, slopes, F)
     * profile is bit-equal to batch q_chow over the closed prefix. */
-  def chow(events: Dataset[Ev]): Dataset[ChowMark] = {
-    import events.sparkSession.implicits._
-    val anchorDay = java.time.LocalDate.parse(graft.ops.Inference.Anchor).toEpochDay
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PtState, ChowMark](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[Ev], state: GroupState[PtState]) =>
-          val days = rows
-            .map(e => Math.floorDiv(e.ts.getTime, 86400000L) - anchorDay)
-            .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
-          var st = state.getOption.getOrElse(PtState(Long.MinValue, 0L, Nil))
-          val out = Seq.newBuilder[ChowMark]
-          def r6(d: Double) = math.floor(d * 1000000 + 0.5) / 1000000
-          def fold(): Unit = { // close the open day, re-split, re-fit
-            val closed = st.days :+ PtDay(st.openDay, st.openCount)
-            val n = closed.size.toLong
-            val (seg1, seg2) = closed.splitAt(((n / 2)).toInt) // rn·2 ≤ n
-            def moms(s: Seq[PtDay]): (Long, Double, Double, Double, Long) = {
-              val ng = s.size.toLong
-              val sx = s.iterator.map(_.x).sum; val sy = s.iterator.map(_.y).sum
-              val sxx = s.iterator.map(p => p.x * p.x).sum
-              val sxy = s.iterator.map(p => p.x * p.y).sum
-              val syy = s.iterator.map(p => p.y * p.y).sum
-              ((ng, (ng * sxx - sx * sx).toDouble, (ng * sxy - sx * sy).toDouble,
-                (ng * syy - sy * sy).toDouble, if (s.isEmpty) 0L else s.map(_.x).max))
-            }
-            val (n1, xx1, xy1, yy1, mx1) = moms(seg1)
-            val (n2, xx2, xy2, yy2, _) = moms(seg2)
-            val (np, xxp, xyp, yyp, _) = moms(closed)
-            def sse(xx: Double, xy: Double, yy: Double, ng: Long) =
-              (yy - (xy / xx) * xy) / ng
-            val s1 = sse(xx1, xy1, yy1, n1); val s2 = sse(xx2, xy2, yy2, n2)
-            val sp = sse(xxp, xyp, yyp, np)
-            val sw = s1 + s2
-            val slope1 = if (xx1 > 0) Some(r6(xy1 / xx1)) else None
-            val slope2 = if (xx2 > 0) Some(r6(xy2 / xx2)) else None
-            val f =
-              if (n1 >= 3 && n2 >= 3 && xx1 > 0 && xx2 > 0 && xxp > 0 && sw > 0)
-                Some(r6(((sp - sw) / 2) / (sw / (np - 4))))
-              else None
-            // batch emits only types with BOTH segments; n = 1 has no
-            // segment 1 (rn·2 = 2 > 1), mirrored here by n1 = 0
-            if (n1 > 0)
-              out += ChowMark(typ, st.openDay, st.openCount, n, n1, n2, mx1,
-                slope1, slope2, f)
-            st = PtState(Long.MinValue, 0L, closed)
-          }
-          days.foreach { case (d, c) =>
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openCount = c)
-            else if (d == st.openDay) st = st.copy(openCount = st.openCount + c)
-            else if (d > st.openDay) { fold(); st = st.copy(openDay = d, openCount = c) }
-            // d < openDay: behind the fold horizon — dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+  def chow(events: Dataset[Ev]): Dataset[ChowMark] =
+    dayCloseMonitor(events, Seq.empty[PtDay]) {
+      (typ, x, y, days) => // append the closing day, re-split, re-fit
+        val closed = days :+ PtDay(x, y)
+        val n = closed.size.toLong
+        val (seg1, seg2) = closed.splitAt(((n / 2)).toInt) // rn·2 ≤ n
+        def moms(s: Seq[PtDay]): (Long, Double, Double, Double, Long) = {
+          val ng = s.size.toLong
+          val sx = s.iterator.map(_.x).sum; val sy = s.iterator.map(_.y).sum
+          val sxx = s.iterator.map(p => p.x * p.x).sum
+          val sxy = s.iterator.map(p => p.x * p.y).sum
+          val syy = s.iterator.map(p => p.y * p.y).sum
+          ((ng, (ng * sxx - sx * sx).toDouble, (ng * sxy - sx * sy).toDouble,
+            (ng * syy - sy * sy).toDouble, if (s.isEmpty) 0L else s.map(_.x).max))
+        }
+        val (n1, xx1, xy1, yy1, mx1) = moms(seg1)
+        val (n2, xx2, xy2, yy2, _) = moms(seg2)
+        val (np, xxp, xyp, yyp, _) = moms(closed)
+        def sse(xx: Double, xy: Double, yy: Double, ng: Long) =
+          (yy - (xy / xx) * xy) / ng
+        val s1 = sse(xx1, xy1, yy1, n1); val s2 = sse(xx2, xy2, yy2, n2)
+        val sp = sse(xxp, xyp, yyp, np)
+        val sw = s1 + s2
+        val slope1 = if (xx1 > 0) Some(r6(xy1 / xx1)) else None
+        val slope2 = if (xx2 > 0) Some(r6(xy2 / xx2)) else None
+        val f =
+          if (n1 >= 3 && n2 >= 3 && xx1 > 0 && xx2 > 0 && xxp > 0 && sw > 0)
+            Some(r6(((sp - sw) / 2) / (sw / (np - 4))))
+          else None
+        // batch emits only types with BOTH segments; n = 1 has no
+        // segment 1 (rn·2 = 2 > 1), mirrored here by n1 = 0
+        (closed,
+          if (n1 > 0) Some(ChowMark(typ, x, y, n, n1, n2, mx1, slope1, slope2, f))
+          else None)
+    }
 
   /** Streaming count-min sketch (s_countmin) — the incremental face of
     * batch q_countmin_err's frequency sketch, and the canonical
@@ -1906,10 +1338,6 @@ object Streams {
       .groupBy("p_brand")
       .agg(sum(lit(1) - col("bad")).as("n_good"), sum("bad").as("n_bad"))
 
-  /** Read-time WoE/IV projection over a [[brandRiskCounts]] grid —
-    * delegates to the SAME fold as batch q_woe_iv. */
-  def woeOf(grid: DataFrame): DataFrame = graft.ops.Analytics.woeOf(grid)
-
   /** Streaming inter-event gap bands (s_gap_hist) — the live face of
     * batch q_gap_hist: per user, ONE row of state (the last seen
     * (es, event_id)) turns each arriving event into its gap's exact
@@ -2047,23 +1475,25 @@ final case class NewRetState(maxDay: Long, mask: Long)
 /** One (user, day) activity marker with its new-user flag. */
 final case class DayMarker(user_id: Long, epoch_day: Long, is_new: Boolean)
 
-/** Per-type Page–Hinkley monitor state: the still-open day and its
-  * running count, plus the exact int64 sufficient statistics of the
-  * closed-day recurrence (n, Σy, m6, min m6, max drift, argmax day).
+/** The state a day-close monitor keeps per type: the still-open day
+  * and its running count beside the monitor's closed-day state.
   * openDay == Long.MinValue means "no day open". */
-final case class PhState(openDay: Long, openCount: Long, n: Long, s: Long,
-                         m6: Long, mn: Long, ph6: Long, driftDay: Long)
+final case class DayClose[S](openDay: Long, openCount: Long, closed: S)
+
+/** Page–Hinkley closed-day state: the exact int64 sufficient
+  * statistics of the recurrence (n, Σy, m6, min m6, max drift, argmax
+  * day). */
+final case class PhState(n: Long, s: Long, m6: Long, mn: Long, ph6: Long,
+                         driftDay: Long)
 
 /** One closed-day emission of the running Page–Hinkley profile. */
 final case class PhMark(event_type: String, day_closed: Long, y: Long,
                         n_days: Long, ph: Double, drift_day: Long)
 
-/** Per-type Mann–Kendall monitor state: the open (day, count) pair,
-  * the running (n, S), and the multiset of closed daily counts (the
-  * tie groups and the sign-comparison base) — calendar-bounded.
-  * openDay == Long.MinValue means "no day open". */
-final case class MkState(openDay: Long, openCount: Long, n: Long, s: Long,
-                         counts: Map[Long, Long])
+/** Mann–Kendall closed-day state: the running (n, S) and the
+  * multiset of closed daily counts (the tie groups and the
+  * sign-comparison base) — calendar-bounded. */
+final case class MkState(n: Long, s: Long, counts: Map[Long, Long])
 
 /** One closed-day emission of the running Mann–Kendall profile;
   * z is None while the variance is degenerate (all counts tied). */
@@ -2074,19 +1504,16 @@ final case class MkMark(event_type: String, day_closed: Long, y: Long,
   * Mann–Kendall state: t closed days in stratum dow had count y. */
 final case class SmkCnt(dow: Long, y: Long, t: Long)
 
-/** Per-type seasonal Mann–Kendall state: the open (day, count) pair,
-  * the running (n, S), and the per-stratum closed-count multiset —
-  * calendar-bounded (7 strata × the distinct daily counts). */
-final case class SmkState(openDay: Long, openCount: Long, n: Long, s: Long,
-                          counts: Seq[SmkCnt])
+/** Seasonal Mann–Kendall closed-day state: the running (n, S) and
+  * the per-stratum closed-count multiset — calendar-bounded (7 strata
+  * × the distinct daily counts). */
+final case class SmkState(n: Long, s: Long, counts: Seq[SmkCnt])
 
-/** One closed (day, count) pair of the Pettitt state's ordered series. */
+/** One closed (day, count) pair. The ordered Seq of them — one pair
+  * per closed calendar day — is the whole closed-day state of the
+  * Pettitt, Grubbs, KPSS and Chow monitors: their statistics are not
+  * mergeable, so the series IS the sufficient statistic. */
 final case class PtDay(x: Long, y: Long)
-
-/** Per-type Pettitt state: the open (day, count) pair plus the ordered
-  * closed daily series — one pair per closed calendar day (ranks are
-  * not mergeable, so the series IS the sufficient statistic). */
-final case class PtState(openDay: Long, openCount: Long, days: Seq[PtDay])
 
 /** One closed-day emission of the running Pettitt profile; p_exponent
   * is None until two days have closed. */
@@ -2106,16 +1533,11 @@ final case class ChowMark(event_type: String, day_closed: Long, y: Long,
                           slope1: Option[Double], slope2: Option[Double],
                           f_stat: Option[Double])
 
-/** Per-type Durbin–Watson state: the open (day, count) pair, the last
-  * CLOSED (day, count) pair (the lag anchor), and the nine int64
-  * accumulators (n + six moment sums + three lag-diff sums) — thirteen
-  * longs total, mergeable forever. lastX == Long.MinValue means "no
-  * day closed yet". */
-/** Per-type runs-test state: the open pair, the last closed count,
-  * the last sign (0 = none yet), and the three run counters — seven
-  * longs, mergeable forever. */
-final case class RunsState(openDay: Long, openCount: Long, lastY: Long,
-                           lastSg: Long, nUp: Long, nDown: Long, nRuns: Long)
+/** Runs-test closed-day state: the last closed count, the last sign
+  * (0 = none yet), and the three run counters — five longs, mergeable
+  * forever. */
+final case class RunsState(lastY: Long, lastSg: Long, nUp: Long,
+                           nDown: Long, nRuns: Long)
 
 /** One closed-day emission of the running runs-test profile; z is None
   * until both sign classes are populated. */
@@ -2123,21 +1545,20 @@ final case class RunsMark(event_type: String, day_closed: Long, y: Long,
                           n_up: Long, n_down: Long, n_runs: Long,
                           z: Option[Double])
 
-/** Per-type turning-points state: the open pair, the last two closed
-  * counts (MinValue sentinels), and the day/turn counters — six longs,
+/** Turning-points closed-day state: the last two closed counts
+  * (MinValue sentinels) and the day/turn counters — four longs,
   * mergeable forever. */
-final case class TurnState(openDay: Long, openCount: Long, prev1: Long,
-                           prev2: Long, nDays: Long, nTurning: Long)
+final case class TurnState(prev1: Long, prev2: Long, nDays: Long,
+                           nTurning: Long)
 
 /** One closed-day emission of the running turning-points profile. */
 final case class TurnMark(event_type: String, day_closed: Long, y: Long,
                           n_days: Long, n_turning: Long, expected: Double,
                           z: Option[Double])
 
-/** Per-type Poisson-dispersion state: the open pair plus the three
-  * moment sums — five longs, mergeable forever. */
-final case class PoisState(openDay: Long, openCount: Long, n: Long,
-                           s: Long, ss: Long)
+/** Poisson-dispersion closed-day state: the three moment sums —
+  * mergeable forever. */
+final case class PoisState(n: Long, s: Long, ss: Long)
 
 /** One closed-day emission of the running dispersion profile. */
 final case class PoisMark(event_type: String, day_closed: Long, y: Long,
@@ -2151,8 +1572,11 @@ final case class GrubbsMark(event_type: String, day_closed: Long, y: Long,
                             n_days: Long, outlier_day: Long,
                             outlier_count: Long, g: Option[Double])
 
-final case class DwState(openDay: Long, openCount: Long,
-                         lastX: Long, lastY: Long, n: Long,
+/** Durbin–Watson closed-day state: the last CLOSED (day, count) pair
+  * (the lag anchor) and the nine int64 accumulators (n + five moment
+  * sums + three lag-diff sums) — eleven longs, mergeable forever.
+  * lastX == Long.MinValue means "no day closed yet". */
+final case class DwState(lastX: Long, lastY: Long, n: Long,
                          sx: Long, sy: Long, sxx: Long, sxy: Long, syy: Long,
                          suu: Long, suv: Long, svv: Long)
 

@@ -196,8 +196,8 @@ class GraphScaleSpec extends SparkSpec {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty,
       "precondition: suite session must start on the localCheckpoint branch")
-    // graph iteratives (Graph.snapshot) plus representative users of
-    // the shared Q.snapshot helper (markov's 3-iteration matrix frame,
+    // graph iteratives plus representative users of the shared
+    // Q.snapshot helper (markov's 3-iteration matrix frame,
     // interpurchase's multi-branch fact frame, the CC-based clusters)
     for (q <- Seq("q_pagerank", "q_graph_kcore", "q_graph_bfs",
         "q_markov_stationary", "q_interpurchase", "q_dup_clusters")) {

@@ -207,7 +207,7 @@ class StreamingSpec extends SparkSpec {
       chunks.foreach { c => in.addData(c: _*); q.processAllAvailable() }
       // κ divides out at read time through the SAME Diagnostics.kappaOf
       // fold the batch op routes through — one home, twins cannot drift
-      val streamed = Streams.kappaOf(spark.table("t_kappa")).head()
+      val streamed = ops.Diagnostics.kappaOf(spark.table("t_kappa")).head()
       val batch = SparkEntry.queries("q_cohens_kappa")(spark, sfDir).head()
       for (f <- Seq("n_docs", "n_agree"))
         assert(streamed.getAs[Long](f) === batch.getAs[Long](f), f)
@@ -251,19 +251,19 @@ class StreamingSpec extends SparkSpec {
       // through the SAME folds the batch queries route through
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.kruskalWallisOf(grid)) ===
+      assert(rows1(ops.Statistics.kruskalWallisOf(grid)) ===
         rows1(SparkEntry.queries("q_kruskal_wallis")(spark, sfDir)), "KW")
-      assert(rows1(Streams.dunnOf(grid)) ===
+      assert(rows1(ops.Statistics.dunnOf(grid)) ===
         rows1(SparkEntry.queries("q_dunn")(spark, sfDir)), "Dunn")
-      assert(rows1(Streams.jonckheereOf(grid)) ===
+      assert(rows1(ops.Statistics.jonckheereOf(grid)) ===
         rows1(SparkEntry.queries("q_jonckheere")(spark, sfDir)), "JT")
-      assert(rows1(Streams.isotonicOf(grid)) ===
+      assert(rows1(ops.Ranking.isotonicOf(grid)) ===
         rows1(SparkEntry.queries("q_isotonic")(spark, sfDir)), "isotonic")
       assert(rows1(Streams.kmeans1dOf(grid)) ===
         rows1(SparkEntry.queries("q_kmeans_1d")(spark, sfDir)), "kmeans")
       assert(rows1(Streams.gmmEmOf(grid)) ===
         rows1(SparkEntry.queries("q_gmm_em")(spark, sfDir)), "GMM EM")
-      assert(rows1(Streams.logistic1dOf(grid)) ===
+      assert(rows1(ops.Mixture.logisticOf(grid)) ===
         rows1(SparkEntry.queries("q_logistic_1d")(spark, sfDir)), "logistic")
       assert(rows1(Streams.huberOf(grid)) ===
         rows1(SparkEntry.queries("q_huber")(spark, sfDir)), "Huber")
@@ -380,79 +380,79 @@ class StreamingSpec extends SparkSpec {
         s"dailyGrid state exceeded its |types|×|days| bound ($nTypes × $nDays)")
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.moodsMedianOf(grid)) ===
+      assert(rows1(ops.SeriesTests.moodsMedianOf(grid)) ===
         rows1(SparkEntry.queries("q_moods_median")(spark, sfDir)), "Mood's median")
-      assert(rows1(Streams.friedmanOf(grid)) ===
+      assert(rows1(ops.SeriesTests.friedmanOf(grid)) ===
         rows1(SparkEntry.queries("q_friedman")(spark, sfDir)), "Friedman")
-      assert(rows1(Streams.nemenyiOf(grid)) ===
+      assert(rows1(ops.SeriesTests.nemenyiOf(grid)) ===
         rows1(SparkEntry.queries("q_nemenyi")(spark, sfDir)), "Nemenyi")
-      assert(rows1(Streams.wilcoxonOf(grid)) ===
+      assert(rows1(ops.SeriesTests.wilcoxonOf(grid)) ===
         rows1(SparkEntry.queries("q_wilcoxon_signed")(spark, sfDir)), "Wilcoxon")
-      assert(rows1(Streams.periodogramOf(grid)) ===
+      assert(rows1(ops.SeriesTests.periodogramOf(grid)) ===
         rows1(SparkEntry.queries("q_periodogram")(spark, sfDir)), "Periodogram")
-      assert(rows1(Streams.cusumOf(grid)) ===
+      assert(rows1(ops.Timeseries.cusumOf(grid)) ===
         rows1(SparkEntry.queries("q_cusum")(spark, sfDir)), "CUSUM")
-      assert(rows1(Streams.ewmaOf(grid)) ===
+      assert(rows1(ops.Timeseries.ewmaOf(grid)) ===
         rows1(SparkEntry.queries("q_ewma")(spark, sfDir)), "EWMA")
-      assert(rows1(Streams.acfOf(grid)) ===
+      assert(rows1(ops.Timeseries.acfOf(grid)) ===
         rows1(SparkEntry.queries("q_acf")(spark, sfDir)), "ACF")
-      assert(rows1(Streams.pairedTOf(grid)) ===
+      assert(rows1(ops.SeriesTests.pairedTOf(grid)) ===
         rows1(SparkEntry.queries("q_paired_t")(spark, sfDir)), "paired t")
-      assert(rows1(Streams.trendFitOf(grid)) ===
+      assert(rows1(ops.Statistics.trendFitOf(grid)) ===
         rows1(SparkEntry.queries("q_trend_fit")(spark, sfDir)), "trend fit")
-      assert(rows1(Streams.ar1Of(grid)) ===
+      assert(rows1(ops.Inference.ar1Of(grid)) ===
         rows1(SparkEntry.queries("q_ar1")(spark, sfDir)), "AR(1)")
-      assert(rows1(Streams.changepointOf(grid)) ===
+      assert(rows1(ops.Inference.changepointOf(grid)) ===
         rows1(SparkEntry.queries("q_changepoint")(spark, sfDir)), "changepoint")
-      assert(rows1(Streams.decomposeOf(grid)) ===
+      assert(rows1(ops.Timeseries.decomposeOf(grid)) ===
         rows1(SparkEntry.queries("q_decompose")(spark, sfDir)), "decompose")
-      assert(rows1(Streams.seasonalStrengthOf(grid)) ===
+      assert(rows1(ops.Timeseries.seasonalStrengthOf(grid)) ===
         rows1(SparkEntry.queries("q_seasonal_strength")(spark, sfDir)), "strength")
-      assert(rows1(Streams.seasonalAnomalyOf(grid)) ===
+      assert(rows1(ops.Timeseries.seasonalAnomalyOf(grid)) ===
         rows1(SparkEntry.queries("q_seasonal_anomaly")(spark, sfDir)), "seasonal anomaly")
-      assert(rows1(Streams.sprtOf(grid)) ===
+      assert(rows1(ops.Inference.sprtOf(grid)) ===
         rows1(SparkEntry.queries("q_sprt")(spark, sfDir)), "SPRT")
-      assert(rows1(Streams.matrixProfileOf(grid)) ===
+      assert(rows1(ops.Inference.matrixProfileOf(grid)) ===
         rows1(SparkEntry.queries("q_matrix_profile")(spark, sfDir)), "matrix profile")
-      assert(rows1(Streams.kendallWOf(grid)) ===
+      assert(rows1(ops.SeriesTests.kendallWOf(grid)) ===
         rows1(SparkEntry.queries("q_kendall_w")(spark, sfDir)), "Kendall W")
-      assert(rows1(Streams.burstDetectOf(grid)) ===
+      assert(rows1(ops.Inference.burstDetectOf(grid)) ===
         rows1(SparkEntry.queries("q_burst_detect")(spark, sfDir)), "burst filter")
-      assert(rows1(Streams.quadeOf(grid)) ===
+      assert(rows1(ops.SeriesTests.quadeOf(grid)) ===
         rows1(SparkEntry.queries("q_quade")(spark, sfDir)), "Quade")
-      assert(rows1(Streams.yuleWalkerOf(grid)) ===
+      assert(rows1(ops.SeriesTests.yuleWalkerOf(grid)) ===
         rows1(SparkEntry.queries("q_yule_walker")(spark, sfDir)), "Yule-Walker")
-      assert(rows1(Streams.spectralEntropyOf(grid)) ===
+      assert(rows1(ops.SeriesTests.spectralEntropyOf(grid)) ===
         rows1(SparkEntry.queries("q_spectral_entropy")(spark, sfDir)), "spectral entropy")
-      assert(rows1(Streams.cronbachOf(grid)) ===
+      assert(rows1(ops.SeriesTests.cronbachOf(grid)) ===
         rows1(SparkEntry.queries("q_cronbach_alpha")(spark, sfDir)), "Cronbach alpha")
-      assert(rows1(Streams.iccOf(grid)) ===
+      assert(rows1(ops.SeriesTests.iccOf(grid)) ===
         rows1(SparkEntry.queries("q_icc")(spark, sfDir)), "ICC")
-      assert(rows1(Streams.permEntropyOf(grid)) ===
+      assert(rows1(ops.SeriesTests.permEntropyOf(grid)) ===
         rows1(SparkEntry.queries("q_perm_entropy")(spark, sfDir)), "permutation entropy")
-      assert(rows1(Streams.sampenOf(grid)) ===
+      assert(rows1(ops.SeriesTests.sampenOf(grid)) ===
         rows1(SparkEntry.queries("q_sampen")(spark, sfDir)), "sample entropy")
-      assert(rows1(Streams.thetaForecastOf(grid)) ===
+      assert(rows1(ops.SeriesTests.thetaForecastOf(grid)) ===
         rows1(SparkEntry.queries("q_theta_forecast")(spark, sfDir)), "theta forecast")
-      assert(rows1(Streams.backtestNaiveOf(grid)) ===
+      assert(rows1(ops.SeriesTests.backtestNaiveOf(grid)) ===
         rows1(SparkEntry.queries("q_backtest_naive")(spark, sfDir)), "backtest")
-      assert(rows1(Streams.macdOf(grid)) ===
+      assert(rows1(ops.SeriesTests.macdOf(grid)) ===
         rows1(SparkEntry.queries("q_macd")(spark, sfDir)), "MACD")
-      assert(rows1(Streams.sigmaClipOf(grid)) ===
+      assert(rows1(ops.SeriesTests.sigmaClipOf(grid)) ===
         rows1(SparkEntry.queries("q_sigma_clip")(spark, sfDir)), "sigma clip")
-      assert(rows1(Streams.dtwOf(grid)) ===
+      assert(rows1(ops.SeriesTests.dtwOf(grid)) ===
         rows1(SparkEntry.queries("q_dtw")(spark, sfDir)), "banded DTW")
-      assert(rows1(Streams.haarEnergyOf(grid)) ===
+      assert(rows1(ops.SeriesTests.haarEnergyOf(grid)) ===
         rows1(SparkEntry.queries("q_haar_energy")(spark, sfDir)), "Haar energy")
-      assert(rows1(Streams.loessTrendOf(grid)) ===
+      assert(rows1(ops.SeriesTests.loessTrendOf(grid)) ===
         rows1(SparkEntry.queries("q_loess_trend")(spark, sfDir)), "LOESS")
-      assert(rows1(Streams.forecastIntervalOf(grid)) ===
+      assert(rows1(ops.SeriesTests.forecastIntervalOf(grid)) ===
         rows1(SparkEntry.queries("q_forecast_interval")(spark, sfDir)), "forecast PI")
-      assert(rows1(Streams.coxStuartOf(grid)) ===
+      assert(rows1(ops.SeriesTests.coxStuartOf(grid)) ===
         rows1(SparkEntry.queries("q_cox_stuart")(spark, sfDir)), "Cox-Stuart")
-      assert(rows1(Streams.bartelsOf(grid)) ===
+      assert(rows1(ops.SeriesTests.bartelsOf(grid)) ===
         rows1(SparkEntry.queries("q_bartels_rank")(spark, sfDir)), "Bartels RVN")
-      assert(rows1(Streams.pinballOf(grid)) ===
+      assert(rows1(ops.SeriesTests.pinballOf(grid)) ===
         rows1(SparkEntry.queries("q_pinball")(spark, sfDir)), "pinball")
     }
   }
@@ -483,37 +483,37 @@ class StreamingSpec extends SparkSpec {
         "ksCells state must hold exactly one row per occupied cent cell")
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.ksOf(grid)) ===
+      assert(rows1(ops.Statistics.ksOf(grid)) ===
         rows1(SparkEntry.queries("q_ks_test")(spark, sfDir)), "KS")
-      assert(rows1(Streams.cvmOf(grid)) ===
+      assert(rows1(ops.Statistics.cvmOf(grid)) ===
         rows1(SparkEntry.queries("q_cramer_von_mises")(spark, sfDir)), "CvM")
-      assert(rows1(Streams.w1Of(grid)) ===
+      assert(rows1(ops.Statistics.w1Of(grid)) ===
         rows1(SparkEntry.queries("q_wasserstein_1d")(spark, sfDir)), "W1")
-      assert(rows1(Streams.adOf(grid)) ===
+      assert(rows1(ops.Statistics.adOf(grid)) ===
         rows1(SparkEntry.queries("q_anderson_darling")(spark, sfDir)), "AD")
-      assert(rows1(Streams.cliffsOf(grid)) ===
+      assert(rows1(ops.Statistics.cliffsOf(grid)) ===
         rows1(SparkEntry.queries("q_cliffs_delta")(spark, sfDir)), "Cliffs")
-      assert(rows1(Streams.hellingerOf(grid)) ===
+      assert(rows1(ops.Statistics.hellingerOf(grid)) ===
         rows1(SparkEntry.queries("q_hellinger")(spark, sfDir)), "Hellinger")
-      assert(rows1(Streams.energyOf(grid)) ===
+      assert(rows1(ops.Statistics.energyOf(grid)) ===
         rows1(SparkEntry.queries("q_energy_dist")(spark, sfDir)), "Energy")
-      assert(rows1(Streams.mwOf(grid)) ===
+      assert(rows1(ops.Statistics.mwOf(grid)) ===
         rows1(SparkEntry.queries("q_mann_whitney")(spark, sfDir)), "Mann-Whitney")
-      assert(rows1(Streams.powerOf(grid)) ===
+      assert(rows1(ops.Statistics.powerOf(grid)) ===
         rows1(SparkEntry.queries("q_power_analysis")(spark, sfDir)), "power")
-      assert(rows1(Streams.aucOf(grid)) ===
+      assert(rows1(ops.Statistics.aucOf(grid)) ===
         rows1(SparkEntry.queries("q_auc_roc")(spark, sfDir)), "AUC")
-      assert(rows1(Streams.prAucOf(grid)) ===
+      assert(rows1(ops.Statistics.prAucOf(grid)) ===
         rows1(SparkEntry.queries("q_pr_auc")(spark, sfDir)), "PR-AUC")
-      assert(rows1(Streams.brierOf(grid)) ===
+      assert(rows1(ops.Statistics.brierOf(grid)) ===
         rows1(SparkEntry.queries("q_brier")(spark, sfDir)), "Brier")
-      assert(rows1(Streams.calibrationOf(grid)) ===
+      assert(rows1(ops.Statistics.calibrationOf(grid)) ===
         rows1(SparkEntry.queries("q_calibration")(spark, sfDir)), "calibration")
-      assert(rows1(Streams.confusionOf(grid)) ===
+      assert(rows1(ops.Statistics.confusionOf(grid)) ===
         rows1(SparkEntry.queries("q_confusion_matrix")(spark, sfDir)), "confusion")
-      assert(rows1(Streams.abOf(grid)) ===
+      assert(rows1(ops.Statistics.abOf(grid)) ===
         rows1(SparkEntry.queries("q_ansari_bradley")(spark, sfDir)), "Ansari-Bradley")
-      assert(rows1(Streams.bmOf(grid)) ===
+      assert(rows1(ops.Statistics.bmOf(grid)) ===
         rows1(SparkEntry.queries("q_brunner_munzel")(spark, sfDir)), "Brunner-Munzel")
     }
   }
@@ -547,7 +547,7 @@ class StreamingSpec extends SparkSpec {
         "wordLenGrid state must hold one row per occupied (lang, band) cell")
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.wordLenOf(grid)) ===
+      assert(rows1(ops.Lexicon.wordLenOf(grid)) ===
         rows1(SparkEntry.queries("q_word_len_hist")(spark, sfDir)), "word-len profile")
     }
   }
@@ -577,7 +577,7 @@ class StreamingSpec extends SparkSpec {
         "audioGrid state must hold exactly one row per event type")
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.audioFeaturesOf(grid)) ===
+      assert(rows1(ops.Multimodal.audioFeaturesOf(grid)) ===
         rows1(SparkEntry.queries("q_audio_features")(spark, sfDir)), "audio profile")
     }
   }
@@ -607,7 +607,7 @@ class StreamingSpec extends SparkSpec {
         "audioFpGrid state must hold one row per occupied (type, fp) cell")
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.audioFingerprintOf(grid)) ===
+      assert(rows1(ops.Multimodal.audioFingerprintOf(grid)) ===
         rows1(SparkEntry.queries("q_audio_fingerprint")(spark, sfDir)),
         "fingerprint profile")
     }
@@ -634,7 +634,7 @@ class StreamingSpec extends SparkSpec {
         "videoGrid state must hold exactly one row per source")
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.videoProfileOf(grid)) ===
+      assert(rows1(ops.Multimodal.videoProfileOf(grid)) ===
         rows1(SparkEntry.queries("q_video_profile")(spark, sfDir)), "video profile")
     }
   }
@@ -655,7 +655,7 @@ class StreamingSpec extends SparkSpec {
       val grid = Q.snapshot(spark.table("t_cascade"))
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.cascadeOf(grid)) ===
+      assert(rows1(ops.Curation.cascadeOf(grid)) ===
         rows1(SparkEntry.queries("q_filter_cascade")(spark, sfDir)))
     }
   }
@@ -676,7 +676,7 @@ class StreamingSpec extends SparkSpec {
       val grid = Q.snapshot(spark.table("t_tecells"))
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.targetEncodeOf(grid)) ===
+      assert(rows1(ops.Analytics.targetEncodeOf(grid)) ===
         rows1(SparkEntry.queries("q_target_encode")(spark, sfDir)))
     }
   }
@@ -717,7 +717,7 @@ class StreamingSpec extends SparkSpec {
       val grid = Q.snapshot(spark.table("t_shardbytes"))
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.compactionOf(grid)) ===
+      assert(rows1(ops.Curation.compactionOf(grid)) ===
         rows1(SparkEntry.queries("q_compaction_plan")(spark, sfDir)))
     }
   }
@@ -737,9 +737,9 @@ class StreamingSpec extends SparkSpec {
       val grid = Q.snapshot(spark.table("t_typecents"))
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.trimmedMeanOf(grid)) ===
+      assert(rows1(ops.Analytics.trimmedMeanOf(grid)) ===
         rows1(SparkEntry.queries("q_trimmed_mean")(spark, sfDir)), "trimmed mean")
-      assert(rows1(Streams.bowleyOf(grid)) ===
+      assert(rows1(ops.Analytics.bowleyOf(grid)) ===
         rows1(SparkEntry.queries("q_quantile_skew")(spark, sfDir)), "Bowley")
     }
   }
@@ -762,11 +762,11 @@ class StreamingSpec extends SparkSpec {
       val grid = Q.snapshot(spark.table("t_ulife"))
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.kmOf(grid)) ===
+      assert(rows1(ops.Timeseries.kmOf(grid)) ===
         rows1(SparkEntry.queries("q_kaplan_meier")(spark, sfDir)), "Kaplan-Meier")
-      assert(rows1(Streams.naOf(grid)) ===
+      assert(rows1(ops.Timeseries.naOf(grid)) ===
         rows1(SparkEntry.queries("q_nelson_aalen")(spark, sfDir)), "Nelson-Aalen")
-      assert(rows1(Streams.logRankOf(grid)) ===
+      assert(rows1(ops.Timeseries.logRankOf(grid)) ===
         rows1(SparkEntry.queries("q_log_rank")(spark, sfDir)), "log-rank")
     }
   }
@@ -787,10 +787,10 @@ class StreamingSpec extends SparkSpec {
       val grid = Q.snapshot(spark.table("t_hourly"))
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      assert(rows1(Streams.gumbelOf(grid)) ===
+      assert(rows1(ops.Timeseries.gumbelOf(grid)) ===
         rows1(SparkEntry.queries("q_gumbel_maxima")(spark, sfDir)),
         "read-time Gumbel fit over the incremental hourly grid must equal the batch op")
-      assert(rows1(Streams.diurnalOf(grid)) ===
+      assert(rows1(ops.Analytics.diurnalOf(grid)) ===
         rows1(SparkEntry.queries("q_diurnal")(spark, sfDir)),
         "read-time diurnal shares over the same hourly grid must equal the batch op")
     }
@@ -809,7 +809,7 @@ class StreamingSpec extends SparkSpec {
       chunks.foreach { c => in.addData(c: _*); q.processAllAvailable() }
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      val streamed = rows1(Streams.trimOf(Q.snapshot(spark.table("t_trim"))))
+      val streamed = rows1(ops.Corpus.trimOf(Q.snapshot(spark.table("t_trim"))))
       val batch = rows1(SparkEntry.queries("q_token_budget_trim")(spark, sfDir))
       assert(streamed === batch,
         "read-time trim over the incremental quality grid must equal the batch plan")
@@ -1072,7 +1072,7 @@ class StreamingSpec extends SparkSpec {
       chunks.foreach { c => in.addData(c.toIndexedSeq); q.processAllAvailable() }
       def rows1(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf)).toSeq
-      val streamed = rows1(graft.streaming.Streams.woeOf(
+      val streamed = rows1(ops.Analytics.woeOf(
         Q.snapshot(spark.table("t_brandrisk"))))
       val batch = rows1(SparkEntry.queries("q_woe_iv")(spark, sfDir))
       assert(streamed === batch,
@@ -1525,7 +1525,7 @@ class StreamingSpec extends SparkSpec {
       val (b1, b2) = rows.splitAt(rows.length / 2)
       in.addData(b1.toIndexedSeq); q.processAllAvailable()
       in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val streamed = Streams.tukeyOf(spark.table("t_tukey"))
+      val streamed = ops.SeriesTests.tukeyOf(spark.table("t_tukey"))
         .select("type_a", "type_b", "mean_a", "mean_b", "q_stat")
         .as[(String, String, Double, Double, Double)].collect().toSet
       val batch = SparkEntry.queries("q_tukey_hsd")(spark, sfDir)
@@ -1755,7 +1755,7 @@ class StreamingSpec extends SparkSpec {
       val (b1, b2) = rows.splitAt(rows.length / 2)
       in.addData(b1.toIndexedSeq); q.processAllAvailable()
       in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val streamed = Streams.catEntropyOf(spark.table("t_catent"))
+      val streamed = ops.Inference.entropyOfCells(spark.table("t_catent"))
         .select("day", "n_events", "k_types", "entropy", "evenness")
         .as[(String, Long, Long, Double, Double)].collect().toSet
       val batch = SparkEntry.queries("q_cat_entropy")(spark, sfDir)
@@ -1783,7 +1783,7 @@ class StreamingSpec extends SparkSpec {
       val (b1, b2) = rows.splitAt(rows.length / 2)
       in.addData(b1.toIndexedSeq); q.processAllAvailable()
       in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val streamed = Streams.tailOf(spark.table("t_tail"))
+      val streamed = ops.Analytics.tailFold(spark.table("t_tail"))
         .select("event_type", "n", "p50_usd", "p95_usd", "p99_usd")
         .as[(String, Long, Double, Double, Double)].collect().toSet
       val batch = SparkEntry.queries("q_tail_exact")(spark, sfDir)

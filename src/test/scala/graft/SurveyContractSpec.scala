@@ -171,4 +171,19 @@ class SurveyContractSpec extends AnyFunSuite {
     assert(defined -- listed === Set.empty[String], "tools missing from README's tools/ line")
     assert(listed -- defined === Set.empty[String], "README lists tools that do not exist")
   }
+
+  test("Streams holds no pure pass-through to an ops read-time fold") {
+    // A read-time fold lives in ops and callers use it there; a Streams
+    // def whose whole body hands its grid to one graft.ops function is
+    // a second name for that fold and nothing else. Forwarders that
+    // adapt the grid (a rename, a slice, a decode) or chain onto the
+    // result do not match.
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/streaming/Streams.scala")), "UTF-8")
+    val passThrough = ("""def (\w+)\(grid: DataFrame\): DataFrame =\s*""" +
+      """graft\.ops\.\w+\.\w+\(grid\)[ \t]*\n(?![ \t]*\.)""").r
+    val found = passThrough.findAllMatchIn(src).map(_.group(1)).toSeq
+    if (found.nonEmpty)
+      fail(s"${found.size} pure grid pass-throughs in Streams: ${found.mkString(", ")}")
+  }
 }

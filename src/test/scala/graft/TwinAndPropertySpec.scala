@@ -727,14 +727,18 @@ class TwinAndPropertySpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = toMap(ops.TextPipeline.connectedComponents(pairs))
     val dir = tempDir("graft_cc_ckpt")
-    val reliable = toMap(
-      ops.TextPipeline.connectedComponents(pairs, checkpointDir = Some(dir)))
-    assert(reliable === local)
-    // the iteration state actually landed in reliable storage
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(files) else Seq(f)
-    assert(files(new java.io.File(dir)).nonEmpty,
-      "reliable mode must write checkpoint files")
+    // the checkpoint dir is session state: set it for this call only
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(dir)
+    try {
+      val reliable = toMap(ops.TextPipeline.connectedComponents(pairs))
+      assert(reliable === local)
+      // the iteration state actually landed in reliable storage
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(files) else Seq(f)
+      assert(files(new java.io.File(dir)).nonEmpty,
+        "reliable mode must write checkpoint files")
+    } finally sc.setCheckpointDir(null)
   }
 
   test("q_event_transitions probabilities are a stochastic matrix over observed transitions") {
