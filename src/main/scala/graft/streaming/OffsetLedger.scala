@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference capability this engine exists to generalize: resumable,
@@ -81,7 +81,7 @@ object OffsetLedger {
                                 haltAfterDataForEpoch: Option[Long])
                                (df: DataFrame, epochId: Long): Unit = {
     val epochPath = Paths.get(outDir, s"epoch=$epochId")
-    commitEpoch(ledgerDir, haltAfterDataForEpoch, df, epochId, "key") { cached =>
+    commitEpoch(ledgerDir, haltAfterDataForEpoch, df, epochId, "key") { observed =>
       if (Files.isDirectory(epochPath)) { // uncommitted remnant of a crashed attempt
         // _SUCCESS goes FIRST: the reverse-path walk below deletes
         // `part-*` before `_SUCCESS` ('p' sorts after '_'), so a reader
@@ -99,44 +99,48 @@ object OffsetLedger {
           .forEach(p => Files.delete(p))
         finally walk.close()
       }
-      cached.write.format("graft-kv")
+      observed.write.format("graft-kv")
         .option("path", epochPath.toString).mode(SaveMode.Append).save()
     }
   }
 
   /** The epoch commit both sinks share, in this order: skip an epoch
-    * whose marker exists (a replay of a committed epoch), take the
-    * epoch's row count and `idCol` max/min, run `writeData` (which must
-    * be replay-safe), fire the crash-window halt hook, and commit the
-    * ledger marker last. */
+    * whose marker exists (a replay of a committed epoch), run
+    * `writeData` (which must be replay-safe) on the epoch's frame, read
+    * the epoch's row count and `idCol` max/min, fire the crash-window
+    * halt hook, and commit the ledger marker last. The stats are
+    * observed in the write's own job (`Dataset.observe`), so they
+    * describe exactly the rows written and cost no extra pass over the
+    * epoch. The observation sits in the write's result stage — neither
+    * sink adds an exchange — and Spark merges a result stage's
+    * accumulators once per partition, so a retried task cannot count
+    * twice. */
   private def commitEpoch(ledgerDir: String, haltAfterDataForEpoch: Option[Long],
                           df: DataFrame, epochId: Long, idCol: String)
                          (writeData: DataFrame => Unit): Unit = {
     Files.createDirectories(Paths.get(ledgerDir))
     val marker = ledgerRowPath(ledgerDir, epochId)
     if (Files.exists(marker)) return // replayed epoch: already committed, skip
-    val cached = df.cache()
-    try {
-      val stats = cached.agg(
-        count(lit(1)).cast("long"),
-        coalesce(max(col(idCol)), lit(-1L)),
-        coalesce(min(col(idCol)), lit(-1L))).head()
-      // data first ...
-      writeData(cached)
-      if (haltAfterDataForEpoch.contains(epochId))
-        Runtime.getRuntime.halt(137) // simulated kill -9 in the data→marker window
-      // ... ledger commit last. Files.write(marker, …) would create the
-      // file before filling it — a crash mid-write leaves a truncated
-      // marker that replay treats as committed. Write to a temp file in
-      // the same directory and ATOMIC_MOVE it into place, so the marker
-      // only ever exists fully written.
-      val entry =
-        s"""{"epoch_id":$epochId,"n_rows":${stats.getLong(0)},""" +
-          s""""max_event_id":${stats.getLong(1)},"min_event_id":${stats.getLong(2)}}"""
-      val tmp = Files.createTempFile(Paths.get(ledgerDir), s".epoch_$epochId", ".tmp")
-      Files.write(tmp, entry.getBytes("UTF-8"))
-      Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
-    } finally cached.unpersist()
+    val obs = Observation()
+    // data first ...
+    writeData(df.observe(obs,
+      count(lit(1)).cast("long").as("n_rows"),
+      coalesce(max(col(idCol)), lit(-1L)).as("max_id"),
+      coalesce(min(col(idCol)), lit(-1L)).as("min_id")))
+    val stats = obs.get
+    if (haltAfterDataForEpoch.contains(epochId))
+      Runtime.getRuntime.halt(137) // simulated kill -9 in the data→marker window
+    // ... ledger commit last. Files.write(marker, …) would create the
+    // file before filling it — a crash mid-write leaves a truncated
+    // marker that replay treats as committed. Write to a temp file in
+    // the same directory and ATOMIC_MOVE it into place, so the marker
+    // only ever exists fully written.
+    val entry =
+      s"""{"epoch_id":$epochId,"n_rows":${stats("n_rows")},""" +
+        s""""max_event_id":${stats("max_id")},"min_event_id":${stats("min_id")}}"""
+    val tmp = Files.createTempFile(Paths.get(ledgerDir), s".epoch_$epochId", ".tmp")
+    Files.write(tmp, entry.getBytes("UTF-8"))
+    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
   }
 
   private val LedgerSchema = "epoch_id LONG, n_rows LONG, max_event_id LONG, min_event_id LONG"

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 /** A typed event row — the engine's streaming record (the Spark-native
@@ -130,11 +131,18 @@ object Streams {
     * memory (it does: benchmark suites are millions of n-grams, the
     * corpus is the big side); for a holdout too wide for one in-memory
     * set, run the batch shingle-level broadcast join inside
-    * foreachBatch instead. */
+    * foreachBatch instead.
+    *
+    * The holdout is grouped once, here at definition, into a local
+    * relation; each epoch broadcasts that local relation rather than
+    * re-running the grouping. The broadcast collected the same sets to
+    * the driver every epoch anyway, so the driver-memory bound is
+    * unchanged. A holdout that changes after definition is not seen. */
   def decontamStream(docs: DataFrame, holdoutShingles: DataFrame): DataFrame = {
     // same lang-scoped matching as the batch operator: one shingle set
     // per language, joined on the lang key (still broadcast + map-side)
-    val ho = holdoutShingles.groupBy("lang").agg(collect_set(col("shingle")).as("ho"))
+    val grouped = holdoutShingles.groupBy("lang").agg(collect_set(col("shingle")).as("ho"))
+    val ho = holdoutShingles.sparkSession.createDataFrame(grouped.collect().toSeq.asJava, grouped.schema)
     docs
       .withColumn("words", split(col("text"), " "))
       // the shingle construction is TextPipeline's — one home, so the

@@ -2,8 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.{KafkaSource, OffsetLedger}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's core property, generalized: kill-and-restart resume
   * with no loss and no duplicate processing, via checkpoint WAL +
@@ -161,6 +167,111 @@ class LedgerSpec extends SparkSpec {
     // a SECOND replay of the now-committed epoch is a pure no-op
     OffsetLedger.sink(outDir, ledgerDir)(replay.union(replay), 1L)
     assert(spark.read.parquet(s"$outDir/epoch=1").count() === 2L)
+  }
+
+  /** The two ledger sinks, each with the column pair it ledgers: the
+    * parquet sink takes its stats from `event_id`, the kv sink from
+    * `key` (and graft-kv requires exactly `(key, value)`). */
+  private val ledgerSinks: Seq[(String, String, String, (String, String) => (DataFrame, Long) => Unit)] = Seq(
+    ("sink", "event_id", "text", (out, led) => OffsetLedger.sink(out, led) _),
+    ("kvSink", "key", "value", (out, led) => OffsetLedger.kvSink(out, led) _))
+
+  private def marker(ledgerDir: String, epoch: Long): String =
+    new String(Files.readAllBytes(Paths.get(ledgerDir, f"epoch_$epoch%09d.json")), "UTF-8")
+
+  /** Runs `body` on another thread and fails the test if it has not
+    * finished within `limit`, so a commit that waits forever on its
+    * stats fails instead of hanging the suite. */
+  private def within[T](limit: FiniteDuration)(body: => T): T = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future(body), limit)
+  }
+
+  /** Rows a committed kv epoch holds, read through its part files (the
+    * RFC4180 reader contract of [[OffsetLedger.kvSink]]). */
+  private def kvEpoch(outDir: String, epoch: Long): DataFrame = {
+    val walk = Files.walk(Paths.get(outDir, s"epoch=$epoch"))
+    val parts = try walk.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).map(_.toString).toSeq
+      finally walk.close()
+    spark.read.schema("key LONG, value STRING")
+      .option("escape", "\"").option("multiLine", "true").csv(parts: _*)
+  }
+
+  test("an empty epoch commits zero rows and -1 ids from both sinks, zero-partition inputs included") {
+    import spark.implicits._
+    for ((name, idCol, payload, sinkFor) <- ledgerSinks) {
+      val ddl = StructType.fromDDL(s"$idCol LONG, $payload STRING")
+      val empties = Seq(
+        "empty local frame" -> Seq.empty[(Long, String)].toDF(idCol, payload),
+        "range(0)" -> spark.range(0).select(col("id").as(idCol), col("id").cast("string").as(payload)),
+        "emptyRDD" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ddl),
+        "limit(0)" -> Seq((1L, "a")).toDF(idCol, payload).limit(0))
+      for (((what, df), epoch) <- empties.zipWithIndex) {
+        val outDir = tempDir(s"graft_empty_out_$name")
+        val ledgerDir = tempDir(s"graft_empty_led_$name")
+        within(2.minutes)(sinkFor(outDir, ledgerDir)(df, epoch.toLong))
+        assert(marker(ledgerDir, epoch.toLong).contains(
+          "\"n_rows\":0,\"max_event_id\":-1,\"min_event_id\":-1"), s"$name, $what")
+      }
+    }
+  }
+
+  test("a failing epoch write propagates without hanging and leaves no marker") {
+    for ((name, idCol, payload, sinkFor) <- ledgerSinks) {
+      val outDir = tempDir(s"graft_fail_out_$name")
+      val ledgerDir = tempDir(s"graft_fail_led_$name")
+      val failing = spark.range(0, 10, 1, 2).select(
+        when(col("id") === 7, raise_error(lit("injected write failure"))).otherwise(col("id")).as(idCol),
+        col("id").cast("string").as(payload))
+      val e = intercept[Exception](within(2.minutes)(sinkFor(outDir, ledgerDir)(failing, 3L)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected write failure")), name)
+      assert(OffsetLedger.lastCommittedEpoch(ledgerDir).isEmpty, s"$name: no marker after a failed write")
+    }
+  }
+
+  test("the ledger's stats describe exactly the rows written, on a non-deterministic batch") {
+    for ((name, idCol, payload, sinkFor) <- ledgerSinks) {
+      val outDir = tempDir(s"graft_nd_out_$name")
+      val ledgerDir = tempDir(s"graft_nd_led_$name")
+      val batch = spark.range(0, 10000, 1, 4).filter(rand() < 0.5)
+        .select(col("id").as(idCol), col("id").cast("string").as(payload))
+      sinkFor(outDir, ledgerDir)(batch, 0L)
+      val written = if (name == "sink") spark.read.parquet(s"$outDir/epoch=0") else kvEpoch(outDir, 0L)
+      val Row(n: Long, hi: Long, lo: Long) =
+        written.agg(count(lit(1)), max(col(idCol)), min(col(idCol))).head()
+      val ledger = OffsetLedger.read(spark, ledgerDir).head()
+      assert((ledger.getAs[Long]("n_rows"), ledger.getAs[Long]("max_event_id"),
+        ledger.getAs[Long]("min_event_id")) === ((n, hi, lo)), name)
+      if (name == "kvSink") {
+        val manifest = new String(Files.readAllBytes(Paths.get(outDir, "epoch=0", "_SUCCESS")))
+          .trim.split("\n").map(_.split(":")(1).toLong).sum
+        assert(manifest === n, "kv manifest row count")
+      }
+    }
+  }
+
+  test("a ledger epoch runs one Spark job: the data write") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    for ((name, idCol, payload, sinkFor) <- ledgerSinks) {
+      val batch = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF(idCol, payload)
+      val group = s"ledger_epoch_$name"
+      sc.setJobGroup(group, name)
+      try sinkFor(tempDir(s"graft_jobs_out_$name"), tempDir(s"graft_jobs_led_$name"))(batch, 0L)
+      finally sc.clearJobGroup()
+      // the status store is fed by the listener bus in event order: once
+      // a job started after the sink is visible, so are the sink's jobs
+      val fence = s"${group}_fence"
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(sc.statusTracker.getJobIdsForGroup(fence).length === 1)
+      assert(sc.statusTracker.getJobIdsForGroup(group).length === 1, name)
+    }
   }
 
   test("end-to-end pipeline: rate source → watermark dedup → dim enrich → ledger sink") {

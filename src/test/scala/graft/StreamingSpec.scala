@@ -1713,6 +1713,15 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("decontamStream groups the holdout once at definition, not in every epoch's plan") {
+    import spark.implicits._
+    val holdout = Seq(("en", "the quick fox"), ("fr", "a clean document")).toDF("lang", "shingle")
+    val docs = Seq((1L, "en", "the quick fox jumps")).toDF("doc_id", "lang", "text")
+    val plan = Streams.decontamStream(docs, holdout).queryExecution.optimizedPlan
+    val aggregates = plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+    assert(aggregates.isEmpty, s"holdout grouping left in the per-epoch plan:\n$plan")
+  }
+
   test("streaming dow-profile counts agree with the batch q_seasonality grid") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
