@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A named query with its DuckDB oracle.
@@ -50,6 +50,22 @@ object Q {
     out
   }
 
+  /** [[snapshot]] plus aggregate stats of the materialized rows, taken by
+    * `Dataset.observe` inside the snapshot's own job: a count or checksum
+    * read right after a snapshot costs no second job. Stats are over
+    * exactly the rows materialized (an empty frame gives count 0 and
+    * null sums), in both snapshot modes. The row holds the stats in
+    * argument order. They are read from the snapshot's executed plan
+    * once its job has returned, not from an `Observation`: that waits
+    * for a listener-bus callback, and would block for good if the
+    * callback never came. */
+  def snapshotWith(df: DataFrame, stats: Column*): (DataFrame, Row) = {
+    val name = s"snapshot_stats_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name, stats.head, stats.tail: _*)
+    val snap = snapshot(observed)
+    (snap, observed.queryExecution.observedMetrics(name))
+  }
+
   /** Release a superseded [[snapshot]]'s blocks: its plan is a
     * LogicalRDD over exactly the RDD localCheckpoint persisted, so
     * unpersisting that RDD frees those blocks without touching anything
@@ -85,8 +101,8 @@ object Q {
   /** Size-guarded broadcast for CORPUS-DERIVED build sides (models,
     * candidate sets) whose domain is bounded for this corpus but could
     * outgrow a broadcast at another's (the q_ppl_bucket trigram LM on
-    * a CJK corpus): snapshot the frame, count the materialized rows
-    * (nearly free once checkpointed), and hint the broadcast ONLY
+    * a CJK corpus): snapshot the frame, count its rows in the
+    * snapshot's own job ([[snapshotWith]]), and hint the broadcast ONLY
     * under the bound — above it the join degrades to a plain shuffle
     * join on the same keys. The decision is recorded per RDD id so
     * PlanAuditSpec's broadcast-bound walk can verify the hint was
@@ -95,8 +111,8 @@ object Q {
     * this where the probe side IS a snapshot, because there AQE's
     * conversion still pays the probe's map-side shuffle write first. */
   def sizedBroadcast(df: DataFrame, maxRows: Long): DataFrame = {
-    val snap = snapshot(df)
-    guardedBroadcast(snap, snap.count(), maxRows)
+    val (snap, stats) = snapshotWith(df, count(lit(1)))
+    guardedBroadcast(snap, stats.getLong(0), maxRows)
   }
 
   /** The [[sizedBroadcast]] decision applied to an ALREADY-materialized

@@ -72,7 +72,8 @@ object Graph {
       .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
     val deg = ed0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val e = ed0.join(deg, "src").transform(Q.snapshot)
-    val nodes = e.select(col("src").as("node")).distinct().transform(Q.snapshot)
+    val (nodes, nodeStats) =
+      Q.snapshotWith(e.select(col("src").as("node")).distinct(), count(lit(1)))
     val nDf = nodes.agg(count(lit(1)).as("n_nodes"))
     // ONE count guards every round's broadcast hint: ranks keep exactly
     // one row per node, so |ranks| = |nodes| at every round (r19 —
@@ -81,7 +82,7 @@ object Graph {
     // SMJ form re-exchanged BOTH the |edges| frame and the rank table
     // every round. Above the guard bound rounds degrade to the original
     // shuffle join — nothing is hinted.
-    val nNodes = nodes.count()
+    val nNodes = nodeStats.getLong(0)
     // rounds stay a lazy chain (fixed count, each round feeds exactly
     // one consumer — the Lloyd-rounds precedent); the hint itself is
     // gated on the one nNodes count, and the hinted subtree is a
@@ -370,9 +371,10 @@ object Graph {
     // graph (round 10): which parts form one "bought-together" market
     // basket cluster — the cluster-resolution step q_dup_clusters runs
     // on LSH pairs, applied to the product graph. Spark side: the SAME
-    // iterative min-label propagation (joins per round, localCheckpoint
-    // between rounds, O(log diameter) via the fused first round + path
-    // halving — TextPipeline.connectedComponents). Oracle: DuckDB
+    // iterative min-label propagation (TextPipeline.connectedComponents:
+    // per round one join against the broadcast labels, one min-agg and
+    // one snapshot whose job also observes the convergence checksum;
+    // fused first round + path halving). Oracle: DuckDB
     // WITH RECURSIVE transitive closure over the SAME io/e edge CTEs
     // as the triangle census, so the edge set is shared text and the
     // closure is computed by a genuinely different algorithm — the
@@ -437,10 +439,11 @@ object Graph {
       val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
         .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
         .transform(Q.snapshot)
-      val root = ed.groupBy("src").agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src")).limit(1)
-        .select(col("src").as("id"), lit(0L).as("depth"))
-        .transform(Q.snapshot)
+      val (root, rootStats) = Q.snapshotWith(
+        ed.groupBy("src").agg(count(lit(1)).as("dg"))
+          .orderBy(col("dg").desc, col("src")).limit(1)
+          .select(col("src").as("id"), lit(0L).as("depth")),
+        count(lit(1)))
       // The visited set is only ever a LOOKUP for the anti-join, so it
       // never needs its own snapshot: anti-join against the lazy union
       // of the already-checkpointed per-hop frontiers. Snapshotting the
@@ -449,33 +452,35 @@ object Graph {
       // correctness gain.
       var frontiers = List(root)
       var frontier = root
-      // frontier/visited rows are counted on the already-materialized
-      // snapshots (the count doubles as the emptiness probe below and
-      // as the broadcast row guard — frontiers and the visited union
-      // are node-bounded, so each hop's joins broadcast the node-sized
-      // side and the |edges| frame is never re-exchanged; above the
-      // guard bound hops degrade to the original shuffle joins)
-      var frontierRows = root.count()
+      // frontier/visited rows are counted in each frontier's snapshot
+      // job (Q.snapshotWith; the count doubles as the emptiness probe
+      // below and as the broadcast row guard — frontiers and the
+      // visited union are node-bounded, so each hop's joins broadcast
+      // the node-sized side and the |edges| frame is never
+      // re-exchanged; above the guard bound hops degrade to the
+      // original shuffle joins)
+      var frontierRows = rootStats.getLong(0)
       var reachedRows = frontierRows
       var h = 1
       // stop as soon as a frontier comes back empty — expanding an
       // empty frontier can only yield empty frontiers, so remaining
       // rounds are pure overhead (fires when the root's eccentricity
-      // is < the 4-hop cap; the count probe is a scan of the
-      // already-checkpointed frontier, not a recomputation)
+      // is < the 4-hop cap; the count probe is observed in the
+      // frontier's snapshot job, not a second pass)
       while (h <= 4 && frontierRows > 0) {
         val visited0 = frontiers.reduce(_ unionAll _).select("id")
         val visited =
           if (reachedRows <= NodeStateBroadcastRows) broadcast(visited0) else visited0
         val bf = Q.guardedBroadcast(frontier, frontierRows, NodeStateBroadcastRows)
-        val nxt = ed.join(bf, ed("src") === bf("id"))
-          .select(col("dst").as("id")).distinct()
-          .join(visited, Seq("id"), "left_anti")
-          .select(col("id"), lit(h.toLong).as("depth"))
-          .transform(Q.snapshot)
+        val (nxt, nxtStats) = Q.snapshotWith(
+          ed.join(bf, ed("src") === bf("id"))
+            .select(col("dst").as("id")).distinct()
+            .join(visited, Seq("id"), "left_anti")
+            .select(col("id"), lit(h.toLong).as("depth")),
+          count(lit(1)))
         frontiers = nxt :: frontiers
         frontier = nxt
-        frontierRows = nxt.count()
+        frontierRows = nxtStats.getLong(0)
         reachedRows += frontierRows
         h += 1
       }
@@ -525,10 +530,8 @@ object Graph {
       val edges = coPairs(s, d).transform(Q.snapshot)
       // ONE snapshotted degree table serves both the readout and the
       // triangle census's orientation joins (r19, guide §2.4)
-      val deg = Q.snapshot(
-        edges.select(explode(array(col("a"), col("b"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("deg")))
-      val tri = triangleCornersFrom(edges, deg)
+      val (deg, nDeg) = degreeTable(edges)
+      val tri = triangleCornersFrom(edges, deg, nDeg)
       deg.filter(col("deg") >= 2)
         .join(tri, Seq("node"), "left")
         .select(col("node"), col("deg"),
@@ -577,10 +580,11 @@ object Graph {
       // degree table feeds both endpoint joins: snapshot once,
       // broadcast under the node-state row guard so the edge frame
       // streams through both joins unexchanged (r19, guide §3.1/§2.4)
-      val deg0 = Q.snapshot(
+      val (deg0, degStats) = Q.snapshotWith(
         edges.select(explode(array(col("a"), col("b"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("dg")))
-      val deg = Q.guardedBroadcast(deg0, deg0.count(), NodeStateBroadcastRows)
+          .groupBy("node").agg(count(lit(1)).as("dg")),
+        count(lit(1)))
+      val deg = Q.guardedBroadcast(deg0, degStats.getLong(0), NodeStateBroadcastRows)
       val j = edges
         .join(deg.select(col("node").as("a"), col("dg").as("da")), "a")
         .join(deg.select(col("node").as("b"), col("dg").as("db")), "b")
@@ -684,15 +688,15 @@ object Graph {
       val rows = (1 to KcoreRounds).map { i =>
         val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
           .groupBy("node").agg(count(lit(1)).as("dg"))
-        val keep = deg.filter(col("dg") >= KcoreK).select("node")
-          .transform(Q.snapshot)
+        val (keep, keepStats) =
+          Q.snapshotWith(deg.filter(col("dg") >= KcoreK).select("node"), count(lit(1)))
         // keep is node-sized: under the row guard both endpoint
         // semi-filters broadcast it, so the edge frame never shuffles
         // in a peel round — the only exchange left is the degree agg
         // (r19, guide §3.1; the SMJ form exchanged e twice and keep
         // twice per round). The count doubles as the row guard and as
         // the round's n_nodes readout (same integer either way).
-        val nKeep = keep.count()
+        val nKeep = keepStats.getLong(0)
         val bk = Q.guardedBroadcast(keep, nKeep, NodeStateBroadcastRows)
         e = e
           .join(bk.withColumnRenamed("node", "a"), "a")
@@ -899,14 +903,14 @@ object Graph {
         .orderBy(col("dg").desc, col("src")).limit(5)
         .select(col("src").as("sid"))
         .transform(Q.snapshot)
-      val seed = roots.select(col("sid"), col("sid").as("id"), lit(0L).as("depth"))
-        .transform(Q.snapshot)
+      val (seed, seedStats) = Q.snapshotWith(
+        roots.select(col("sid"), col("sid").as("id"), lit(0L).as("depth")), count(lit(1)))
       var frontiers = List(seed)
       var frontier = seed
       // same hop shape as q_graph_bfs (r19): the (sid, id) frontier and
       // visited union are ≤ 5·|nodes| rows, so both broadcast under the
       // row guard and the |edges| frame is never re-exchanged per hop
-      var frontierRows = seed.count()
+      var frontierRows = seedStats.getLong(0)
       var reachedRows = frontierRows
       var h = 1
       while (h <= 3 && frontierRows > 0) {
@@ -914,14 +918,15 @@ object Graph {
         val visited =
           if (reachedRows <= NodeStateBroadcastRows) broadcast(visited0) else visited0
         val bf = Q.guardedBroadcast(frontier, frontierRows, NodeStateBroadcastRows)
-        val nxt = ed.join(bf, ed("src") === bf("id"))
-          .select(col("sid"), col("dst").as("id")).distinct()
-          .join(visited, Seq("sid", "id"), "left_anti")
-          .withColumn("depth", lit(h.toLong))
-          .transform(Q.snapshot)
+        val (nxt, nxtStats) = Q.snapshotWith(
+          ed.join(bf, ed("src") === bf("id"))
+            .select(col("sid"), col("dst").as("id")).distinct()
+            .join(visited, Seq("sid", "id"), "left_anti")
+            .withColumn("depth", lit(h.toLong)),
+          count(lit(1)))
         frontiers = nxt :: frontiers
         frontier = nxt
-        frontierRows = nxt.count()
+        frontierRows = nxtStats.getLong(0)
         reachedRows += frontierRows
         h += 1
       }
@@ -984,9 +989,10 @@ object Graph {
       val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
         .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
         .transform(Q.snapshot)
-      var lab = ed.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl"))
-        .transform(Q.snapshot)
+      val (lab0, labStats) = Q.snapshotWith(
+        ed.select(col("src").as("id")).distinct().select(col("id"), col("id").as("lbl")),
+        count(lit(1)))
+      var lab = lab0
       // ONE count guards every round's broadcast hint (labels keep
       // exactly one row per node). Round shape (r19, guide §3.1/§2.4):
       // edges(BHJ over the broadcast labels) → repartition(nid) → both
@@ -995,7 +1001,7 @@ object Graph {
       // form exchanged edges + labels + (nid, lbl) + nid — measured
       // 2.46 → 1.16 s for the three rounds at sf0.1. Identical integer
       // counts and min_by decisions — order-free arithmetic.
-      val nNodes = lab.count()
+      val nNodes = labStats.getLong(0)
       for (_ <- 1 to 3) {
         val bl = Q.guardedBroadcast(lab, nNodes, NodeStateBroadcastRows)
         lab = ed.join(bl, ed("src") === bl("id"))
@@ -1148,18 +1154,6 @@ object Graph {
        |ORDER BY round""".stripMargin
   }
 
-  /** Per-node triangle participation counts over the part co-purchase
-    * graph (ALL nodes, unlimited) — the q_graph_triangles body before
-    * the top-20, exposed so TwinAndPropertySpec can assert the
-    * 3·|triangles| corner identity against an independent id-ordered
-    * recount. The edge list and its orientation are localCheckpointed
-    * (the q_pagerank move) so the wedge/closing branches reuse ONE
-    * materialized frame instead of re-deriving lineitem three times. */
-  /** Support-thresholded part co-purchase pair list (a < b) — the
-    * shared edge set under q_graph_triangles, q_item_cosine and
-    * q_graph_components: baskets → in-row sorted pair expansion (the
-    * assoc_rules shape: C(items, 2) per order, never a cross-part
-    * join) → support ≥ [[MinSupport]] filter. */
   /** Distinct (order, part) incidence — the shared basket frame every
     * co-purchase operator starts from. */
   private def orderParts(s: SparkSession, d: String): DataFrame =
@@ -1189,9 +1183,21 @@ object Graph {
       .groupBy("a", "b").agg(count(lit(1)).as("cooc"))
       .filter(col("cooc") >= MinSupport)
 
+  /** Support-thresholded part co-purchase pair list (a < b) — the
+    * shared edge set under q_graph_triangles, q_item_cosine and
+    * q_graph_components: baskets → in-row sorted pair expansion (the
+    * assoc_rules shape: C(items, 2) per order, never a cross-part
+    * join) → support ≥ [[MinSupport]] filter. */
   private[graft] def coPairs(s: SparkSession, d: String): DataFrame =
     coPairsWithSupport(s, d).select("a", "b")
 
+  /** Per-node triangle participation counts over the part co-purchase
+    * graph (ALL nodes, unlimited) — the q_graph_triangles body before
+    * the top-20, exposed so TwinAndPropertySpec can assert the
+    * 3·|triangles| corner identity against an independent id-ordered
+    * recount. The edge list and its orientation are localCheckpointed
+    * (the q_pagerank move) so the wedge/closing branches reuse ONE
+    * materialized frame instead of re-deriving lineitem three times. */
   private[graft] def triangleCorners(s: SparkSession, d: String): DataFrame =
     triangleCornersFrom(coPairs(s, d).transform(Q.snapshot))
 
@@ -1199,22 +1205,32 @@ object Graph {
     * lets q_graph_clustering share one checkpointed edge list between
     * its degree table and the triangle census instead of re-deriving
     * the basket expansion twice. */
-  private[graft] def triangleCornersFrom(edges: DataFrame): DataFrame =
-    triangleCornersFrom(edges,
-      Q.snapshot(edges.select(explode(array(col("a"), col("b"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("deg"))))
+  private[graft] def triangleCornersFrom(edges: DataFrame): DataFrame = {
+    val (deg, nDeg) = degreeTable(edges)
+    triangleCornersFrom(edges, deg, nDeg)
+  }
+
+  /** Snapshotted (node, deg) table of an (a, b) edge frame with its row
+    * count, observed in the snapshot's own job. */
+  private def degreeTable(edges: DataFrame): (DataFrame, Long) = {
+    val (deg, stats) = Q.snapshotWith(
+      edges.select(explode(array(col("a"), col("b"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("deg")),
+      count(lit(1)))
+    (deg, stats.getLong(0))
+  }
 
   /** [[triangleCornersFrom]] with an ALREADY-snapshotted degree table
-    * (node, deg) — q_graph_clustering derives the same table for its
-    * readout, so it passes its snapshot in and the degree agg runs
-    * once per query, not twice. */
+    * (node, deg) of `nDeg` rows — q_graph_clustering derives the same
+    * table for its readout, so it passes its snapshot in and the
+    * degree agg runs once per query, not twice. */
   private[graft] def triangleCornersFrom(edges: DataFrame,
-                                         deg0: DataFrame): DataFrame = {
+                                         deg0: DataFrame, nDeg: Long): DataFrame = {
     // the degree table feeds BOTH orientation joins: broadcast it
     // under the node-state row guard, so the edge frame streams
     // through both joins without an exchange and the degree agg runs
     // once, not twice (r19, guide §3.1/§2.4)
-    val deg = Q.guardedBroadcast(deg0, deg0.count(), NodeStateBroadcastRows)
+    val deg = Q.guardedBroadcast(deg0, nDeg, NodeStateBroadcastRows)
     // orient each edge from its (deg, id)-smaller endpoint; the packed
     // int64 key makes the orientation one scalar comparison and lets
     // the id be recovered with a single modulo at the end

@@ -394,18 +394,34 @@ object TextPipeline {
 
   /** Connected components over an undirected pair set by iterative
     * min-label propagation: every node repeatedly adopts the smallest
-    * label among itself and its neighbors until fixpoint, so each
-    * component converges to its minimum doc_id. Each round is DataFrame
-    * joins/aggs shuffled on the node id; the only driver-side value per
-    * round is ONE scalar — sum(lbl), which is monotone non-increasing
-    * under min-propagation and strictly decreases until the fixpoint,
-    * so equality with the previous round proves convergence without
-    * collecting rows.
+    * label among itself, its neighbors and its label's label until
+    * fixpoint, so each component converges to its minimum doc_id.
     *
-    * Each round also applies path halving (adopt the label of your
-    * label), so rounds are O(log diameter) — long duplication chains
-    * converge in a handful of rounds, and the round count stays flat at
-    * 100 TB (only the per-round shuffle width grows).
+    * A round is one join, one aggregate and one materialization. The
+    * candidate pairs (k, x) — "x may adopt lbl(k)" — are the edges
+    * (src → dst) plus each node's label pointer (lbl → id, path
+    * halving). They join the label table once on k = id; the union
+    * with the current labels then takes min(lbl) per id. Where ids grow
+    * along a chain, pointer distance to the component minimum halves
+    * every round, so rounds are O(log diameter); a path whose ids are
+    * shuffled still takes O(diameter) rounds (a 60-node one up to 36).
+    *
+    * Convergence needs ONE driver-side scalar per round: sum(lbl) is
+    * monotone non-increasing under min-propagation and strictly
+    * decreases until the fixpoint, so equality with the previous round
+    * proves convergence without collecting rows. It is observed
+    * ([[graft.Q.snapshotWith]]) in the job that materializes the round,
+    * together with the row count, so the checksum costs no job.
+    *
+    * The label table keeps exactly one row per node in every round,
+    * so the seed's observed count guards every round's broadcast hint
+    * ([[graft.Q.guardedBroadcast]] under `Graph.NodeStateBroadcastRows`);
+    * above the bound rounds shuffle-join. Measured on a 4-core box (CC
+    * alone on the sf0.1 co-purchase pairs, 7 rounds): at local[4] 2.55
+    * → 1.87 s against the two-join, unhinted, separately-checksummed
+    * round (59 → 24 jobs); at local[32] this round reads slower (2.0 →
+    * 2.6 s) with or without the hint, so the hint is not what costs
+    * there.
     *
     * Durability: round snapshots are [[graft.Q.snapshot]]s — eager
     * `localCheckpoint` on a single box, a reliable `checkpoint()` to
@@ -421,56 +437,46 @@ object TextPipeline {
   /** [[connectedComponents]] plus the number of propagation rounds it
     * took to reach the checksum fixpoint (including the confirming
     * round). Exposed so tests can pin the round count: the fused-first-
-    * round seeding plus path halving make it O(log diameter), and a
-    * regression there would otherwise surface only as a silent
-    * wall-clock multiple (each round is a full join+agg job). */
+    * round seeding plus path halving keep it small on near-dup and
+    * co-purchase graphs, and a regression there would otherwise
+    * surface only as a silent wall-clock multiple. */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, maxRounds: Int = 30): (DataFrame, Int) = {
     // snapshot (not persist) every iteration state: persist only
     // caches EXECUTION — the logical plan still nests every prior
-    // round, and with 2-3 self-references per round Catalyst would
+    // round, and with 3 self-references per round Catalyst would
     // re-analyze an exponentially growing tree. Checkpointing replaces
     // the plan with the materialized RDD, keeping per-round planning
     // O(1).
     val edges = Q.snapshot(
       pairs.select(col("d1").as("src"), col("d2").as("dst"))
         .union(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
+    // (checksum, node count) of each materialized label table
+    val stats = Seq(sum("lbl"), count(lit(1)))
     // seed labels with min(self, direct neighbors) — the first
     // propagation round fused into initialization (edges carry both
     // directions, so one groupBy sees every neighbor). For the common
     // near-dup graph of 2-3-node components this alone is the fixpoint,
     // leaving just the confirming round.
-    var labels = Q.snapshot(
+    val (seed, seedStats) = Q.snapshotWith(
       edges.select(col("src").as("id"), col("dst").as("lbl"))
         .union(edges.select(col("src").as("id"), col("src").as("lbl")))
-        .groupBy("id").agg(min("lbl").as("lbl")))
-    def checksum(df: DataFrame): Option[Long] =
-      Option(df.agg(sum("lbl")).head().get(0)).map(_.asInstanceOf[Long])
-    var prev = checksum(labels)
+        .groupBy("id").agg(min("lbl").as("lbl")),
+      stats: _*)
+    val nNodes = seedStats.getLong(1)
+    var labels = seed
+    var prev = Option(seedStats.get(0))
     var converged = prev.isEmpty // no edges → nothing to propagate
     var round = 0
-    // The rounds deliberately stay SHUFFLE joins (r19, measured): a
-    // broadcast-hinted variant (labels build side under a row guard)
-    // was tried and measured +0.6-0.75 s SLOWER on every CC consumer
-    // at sf0.1 — the per-round broadcast build latency (collect +
-    // ship, twice per round) exceeds the cost of shuffling these
-    // node-sized frames, and the materialized snapshots make the
-    // shuffles cheap.
     while (!converged && round < maxRounds) {
-      val viaEdge = edges.join(labels, col("src") === col("id"))
-        .select(col("dst").as("id"), col("lbl"))
-      // path halving: each node also adopts the label OF its label
-      // (one extra self-join per round), so pointer distance to the
-      // component minimum squares every round — O(log diameter) rounds
-      // instead of O(diameter), which is what bounds wall-clock when a
-      // duplication chain is long
-      val ptr = labels.select(col("id").as("pid"), col("lbl").as("plbl"))
-      val viaPtr = labels.join(ptr, col("lbl") === col("pid"))
-        .select(col("id"), col("plbl").as("lbl"))
-      val next = Q.snapshot(
-        labels.union(viaEdge).union(viaPtr)
-          .groupBy("id").agg(min("lbl").as("lbl")))
-      val cur = checksum(next)
+      val cand = edges.select(col("src").as("k"), col("dst").as("x"))
+        .union(labels.select(col("lbl").as("k"), col("id").as("x")))
+      val lbl = Q.guardedBroadcast(labels, nNodes, Graph.NodeStateBroadcastRows)
+      val adopted = cand.join(lbl, col("k") === col("id"))
+        .select(col("x").as("id"), col("lbl"))
+      val (next, st) = Q.snapshotWith(
+        labels.union(adopted).groupBy("id").agg(min("lbl").as("lbl")), stats: _*)
+      val cur = Option(st.get(0))
       converged = cur == prev
       Q.release(labels) // superseded round state — next is materialized
       labels = next
@@ -480,9 +486,9 @@ object TextPipeline {
     Q.release(edges) // labels is materialized; the edge blocks are done
     // Hitting the round cap without the checksum fixpoint means the
     // labels are NOT component minima yet — returning them silently
-    // would yield wrong cluster ids with no signal. Path halving makes
-    // rounds O(log diameter), so 30 rounds covers any graph up to
-    // ~2^30-long chains; reaching the cap indicates a bug, not load.
+    // would yield wrong cluster ids with no signal. The near-dup and
+    // co-purchase graphs converge in ≤ 8 rounds; a long path with
+    // shuffled ids can need more than 30 and then fails here.
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxRounds rounds")
@@ -749,10 +755,11 @@ object TextPipeline {
     // intent ("A dups B dups C" is one cluster), so the pair set is a
     // graph and the keep/drop decision needs its connected components.
     // Spark side: iterative min-label propagation (connectedComponents
-    // above — distributed joins per round, one scalar checksum per
-    // round for convergence). Oracle side: DuckDB recursive CTE
-    // computing min reachable id per node over the SAME candidate-pair
-    // CTEs, so both the pair graph and the closure are oracle-checked.
+    // above — one join, one aggregate and one materialization per
+    // round; the convergence checksum is observed in that job).
+    // Oracle side: DuckDB recursive CTE computing min reachable id per
+    // node over the SAME candidate-pair CTEs, so both the pair graph
+    // and the closure are oracle-checked.
     // Output: every doc that has ≥1 LSH candidate, its cluster id
     // (= min doc_id in the component — the canonical keeper), the
     // keeper flag, and the cluster size.

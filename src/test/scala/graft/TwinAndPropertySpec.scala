@@ -741,6 +741,168 @@ class TwinAndPropertySpec extends SparkSpec {
     } finally sc.setCheckpointDir(null)
   }
 
+  // ---- connected components: twins, empty inputs, per-round work ----
+
+  /** Component minima by union-find: the labels CC must reach. */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(v: Long): Long = {
+      val p = parent.getOrElseUpdate(v, v)
+      if (p == v) v else { val r = find(p); parent(v) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { parent(math.max(ra, rb)) = math.min(ra, rb) }
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  /** The CC round rule simulated on the driver: seed with min(self,
+    * neighbors), then each round min over self, in-neighbors' labels and
+    * the label of the label, until sum(lbl) repeats (the confirming
+    * round counts). Returns the round count CC must report. */
+  private def simulatedRounds(pairs: Seq[(Long, Long)]): Int = {
+    val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+    if (edges.isEmpty) return 0
+    val into = edges.groupMap(_._2)(_._1)
+    var lbl = edges.groupMapReduce(_._1)(_._2)(math.min).map { case (v, m) => v -> math.min(v, m) }
+    var prev = lbl.values.sum
+    var rounds = 0
+    var done = false
+    while (!done) {
+      val cur = lbl
+      lbl = cur.map { case (x, l) => x -> (into(x).map(cur) :+ l :+ cur(l)).min }
+      rounds += 1
+      done = lbl.values.sum == prev
+      prev = lbl.values.sum
+    }
+    rounds
+  }
+
+  /** Seeded pair sets mixing long chains and stars over shuffled ids
+    * (so the minimum sits anywhere along a chain), duplicate and
+    * reversed pairs, self-loops and many 2-node components. */
+  private def randomPairs(seed: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((1L to 400L).toVector).iterator
+    // shuffled ids make chain rounds grow with length, not its log, so
+    // the chains stay short enough for a few rounds each
+    val chains = (1 to 3).flatMap { _ =>
+      val c = Seq.fill(8 + rnd.nextInt(12))(ids.next())
+      c.zip(c.tail)
+    }
+    val stars = (1 to 2).flatMap { _ =>
+      val hub = ids.next()
+      Seq.fill(5 + rnd.nextInt(10))(hub -> ids.next())
+    }
+    val twos = Seq.fill(40)((ids.next(), ids.next()))
+    val base = chains ++ stars ++ twos
+    val dups = Seq.fill(15)(base(rnd.nextInt(base.size)))
+    val reversed = Seq.fill(15)(base(rnd.nextInt(base.size))).map(_.swap)
+    val loops = Seq.fill(5)(base(rnd.nextInt(base.size))._1).map(v => v -> v) ++
+      Seq.fill(3)(ids.next()).map(v => v -> v)
+    rnd.shuffle(base ++ dups ++ reversed ++ loops)
+  }
+
+  private def withCheckpointDir[T](reliable: Boolean)(body: => T): T =
+    if (!reliable) body
+    else {
+      val sc = spark.sparkContext
+      sc.setCheckpointDir(tempDir("graft_cc_twin_ckpt"))
+      try body finally sc.setCheckpointDir(null)
+    }
+
+  test("connectedComponents matches union-find labels and the simulated round count") {
+    import spark.implicits._
+    for (reliable <- Seq(false, true); seed <- Seq(11L, 12L, 13L)) withCheckpointDir(reliable) {
+      val pairs = randomPairs(seed)
+      val (labels, rounds) =
+        ops.TextPipeline.connectedComponentsWithRounds(pairs.toDF("d1", "d2"))
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val what = s"seed $seed, reliable=$reliable"
+      assert(got === unionFindLabels(pairs), what)
+      assert(rounds === simulatedRounds(pairs), what)
+    }
+  }
+
+  test("Q.snapshotWith observes exactly the rows it materializes, in both snapshot modes") {
+    for (reliable <- Seq(false, true)) withCheckpointDir(reliable) {
+      // a non-deterministic frame: a second evaluation would draw other rows
+      val df = spark.range(0, 10000, 1, 4).toDF("id").filter(rand() < 0.5)
+      val (snap, stats) = Q.snapshotWith(df, count(lit(1)), sum("id"), max("id"))
+      val direct = snap.agg(count(lit(1)), sum("id"), max("id")).head()
+      assert(stats === direct, s"reliable=$reliable")
+    }
+  }
+
+  test("Q.snapshotWith and connectedComponents return on empty inputs in both snapshot modes") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import spark.implicits._
+    def within[T](body: => T): T = Await.result(Future(body), 2.minutes)
+    val schema = StructType.fromDDL("d1 LONG, d2 LONG")
+    val empties = Seq(
+      "empty local frame" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
+      "range(0)" -> spark.range(0).select(col("id").as("d1"), col("id").as("d2")),
+      "emptyRDD" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      "limit(0)" -> Seq((1L, 2L)).toDF("d1", "d2").limit(0))
+    for (reliable <- Seq(false, true); (what, df) <- empties) withCheckpointDir(reliable) {
+      val (snap, stats) = within(Q.snapshotWith(df, count(lit(1)), sum("d1")))
+      assert(snap.isEmpty, what)
+      assert(stats === Row(0L, null), s"$what, reliable=$reliable")
+      val (labels, rounds) = within(ops.TextPipeline.connectedComponentsWithRounds(df))
+      assert(labels.isEmpty && rounds === 0, s"$what, reliable=$reliable")
+    }
+  }
+
+  test("a connectedComponents round is one join against the row-guarded label broadcast") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val group = "graft_cc_jobs"
+    sc.setJobGroup(group, "cc on a 40-node chain")
+    val (labels, rounds) =
+      try ops.TextPipeline.connectedComponentsWithRounds(pairs) finally sc.clearJobGroup()
+    // the status store is fed by the listener bus in event order: once
+    // a job started after CC is visible, so are CC's jobs
+    val fence = s"${group}_fence"
+    sc.setJobGroup(fence, "fence")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(fence).length === 1)
+    // edges snapshot (1) + seed (shuffle map + materialize = 2), then per
+    // round the label broadcast, the min-agg map stage and the
+    // materialization that also observes the checksum
+    assert(rounds === 7)
+    assert(sc.statusTracker.getJobIdsForGroup(group).length === 3 + 3 * rounds)
+    // walk the rounds back from the returned labels: each round's origin
+    // plan holds exactly one join, whose broadcast side is the previous
+    // round's label snapshot under a recorded row guard
+    def rddOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+      p.collectFirst { case r: LogicalRDD => r.rdd.id }.get
+    var id = rddOf(labels.queryExecution.analyzed)
+    var walked = 0
+    var joins = Q.snapshotOrigin(id).get.collect { case j: Join => j }
+    while (joins.nonEmpty) {
+      assert(joins.size === 1, s"round ${rounds - walked}: ${joins.size} joins")
+      val j = joins.head
+      assert(j.hint.rightHint.exists(_.strategy.contains(BROADCAST)),
+        s"round ${rounds - walked}: label side not broadcast")
+      id = rddOf(j.right)
+      assert(Q.rowGuard(id) === Some((40L, ops.Graph.NodeStateBroadcastRows)))
+      walked += 1
+      joins = Q.snapshotOrigin(id).get.collect { case j: Join => j }
+    }
+    assert(walked === rounds && rounds > 1)
+  }
+
   test("q_event_transitions probabilities are a stochastic matrix over observed transitions") {
     val t = q("q_event_transitions").cache()
     // per cur row: probabilities sum to 1 within r6 rounding x |nxt|,
