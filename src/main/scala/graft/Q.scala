@@ -66,6 +66,48 @@ object Q {
     (snap, observed.queryExecution.observedMetrics(name))
   }
 
+  /** The eager round driver. It snapshots `seed` and then each
+    * `step(state, stats of state)` through [[snapshotWith]], observing
+    * `stats` in every snapshot's own job, and releases each superseded
+    * state ([[release]]) once its successor is materialized, so the
+    * session holds one round's state, not one per round. It stops when
+    * `stop` holds on the stats so far (seed first) or after `maxRounds`
+    * rounds; a fixed-round loop is one whose stop test never fires.
+    *
+    * The policy: a loop runs here when each round must be materialized
+    * before the next is built. That is a convergence test read on the
+    * driver (connected components), a node-sized state whose row guard
+    * the next round's broadcast needs (label propagation, k-core), or a
+    * plan that would otherwise nest every prior round (persist caches
+    * only execution, so Catalyst would re-analyze a tree that grows
+    * with each round's self-references). Fixed-round chains whose
+    * rounds feed one consumer each (pagerank, HITS, Huber's IRLS,
+    * Markov, textrank) stay lazy: their plan depth is bounded and a
+    * snapshot would only add jobs. BFS and closeness read every
+    * frontier in their result, so nothing is superseded there; they
+    * share `Graph.frontiers` instead. */
+  def iterate(seed: DataFrame, maxRounds: Int, stats: Column*)(
+      step: (DataFrame, Row) => DataFrame,
+      stop: IndexedSeq[Row] => Boolean = _ => false): Rounds = {
+    @annotation.tailrec
+    def go(state: DataFrame, seen: Vector[Row]): Rounds = {
+      val stopped = stop(seen)
+      if (stopped || seen.size > maxRounds) Rounds(state, seen.size - 1, seen, stopped)
+      else {
+        val (next, st) = snapshotWith(step(state, seen.last), stats: _*)
+        release(state)
+        go(next, seen :+ st)
+      }
+    }
+    val (first, st) = snapshotWith(seed, stats: _*)
+    go(first, Vector(st))
+  }
+
+  /** What [[iterate]] ran: the final (materialized, caller-owned) state,
+    * the rounds after the seed, each state's observed stats (seed
+    * first) and whether the stop test fired. */
+  final case class Rounds(state: DataFrame, rounds: Int, stats: IndexedSeq[Row], stopped: Boolean)
+
   /** Release a superseded [[snapshot]]'s blocks: its plan is a
     * LogicalRDD over exactly the RDD localCheckpoint persisted, so
     * unpersisting that RDD frees those blocks without touching anything

@@ -65,11 +65,7 @@ object Graph {
     * rounding / top-50, exposed so TwinAndPropertySpec can assert mass
     * conservation over ALL nodes. */
   private[graft] def pagerankAll(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.load(s, d, "lineitem")
-      .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sn"))
-      .distinct()
-    val ed0 = pairs.select(col("p").as("src"), col("sn").as("dst"))
-      .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
+    val ed0 = int64Edges(s, d)
     val deg = ed0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val e = ed0.join(deg, "src").transform(Q.snapshot)
     val (nodes, nodeStats) =
@@ -103,6 +99,63 @@ object Graph {
           (lit(1 - Damping) / col("n_nodes") + lit(Damping) * col("mass")).as("pr"))
     }
     ranks
+  }
+
+  /** Bidirectional part–supplier edge list (src, dst) with int64 node
+    * ids: part keys even, supplier keys odd. */
+  private def int64Edges(s: SparkSession, d: String): DataFrame = {
+    val pairs = Tables.load(s, d, "lineitem")
+      .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sn"))
+      .distinct()
+    pairs.select(col("p").as("src"), col("sn").as("dst"))
+      .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
+  }
+
+  /** Hop-bounded frontier expansion over the snapshotted [[int64Edges]]
+    * `ed`. `seed(ed)` is hop 0, columns (keys…, id, depth); hop h
+    * keeps, per key, the neighbors of hop h−1 that no earlier hop
+    * reached, at depth h. Returns every hop's frontier, unioned, in the
+    * seed's column order; the edge blocks are released once the last
+    * hop is materialized. Each hop is ONE join frontier⋈edges and ONE
+    * left-anti against the visited set, both on the int64 node key.
+    *
+    * Each frontier's rows are counted in its own snapshot job
+    * ([[graft.Q.snapshotWith]]). The count is the broadcast row guard:
+    * frontiers and the visited union hold at most |nodes| rows per key
+    * value (one source for BFS, five for closeness), so each hop's
+    * joins broadcast that side and the |edges| frame is never
+    * re-exchanged; above the bound hops shuffle-join. It is also
+    * the stop test: an empty frontier can only expand to empty ones, so
+    * the expansion ends there instead of running out the hop cap.
+    *
+    * The visited set is only ever a LOOKUP for the anti-join, so it is
+    * the lazy union of the already-snapshotted frontiers: snapshotting
+    * the growing union every hop would re-materialize the whole visited
+    * set each time for no correctness gain. */
+  private def frontiers(s: SparkSession, d: String, keys: Seq[String], maxHops: Int)(
+      seed: DataFrame => DataFrame): DataFrame = {
+    val ed = int64Edges(s, d).transform(Q.snapshot)
+    val keyed = keys :+ "id"
+    @annotation.tailrec
+    def hop(h: Int, reached: List[DataFrame], rows: Long, reachedRows: Long): DataFrame =
+      if (h > maxHops || rows == 0) reached.reduce(_ unionAll _)
+      else {
+        val visited0 = reached.reduce(_ unionAll _).select(keyed.map(col): _*)
+        val visited =
+          if (reachedRows <= NodeStateBroadcastRows) broadcast(visited0) else visited0
+        val bf = Q.guardedBroadcast(reached.head, rows, NodeStateBroadcastRows)
+        val (next, st) = Q.snapshotWith(
+          ed.join(bf, ed("src") === bf("id"))
+            .select(keys.map(col) :+ col("dst").as("id"): _*).distinct()
+            .join(visited, keyed, "left_anti")
+            .withColumn("depth", lit(h.toLong)),
+          count(lit(1)))
+        hop(h + 1, next :: reached, st.getLong(0), reachedRows + st.getLong(0))
+      }
+    val (root, st) = Q.snapshotWith(seed(ed), count(lit(1)))
+    val reached = hop(1, List(root), st.getLong(0), st.getLong(0))
+    Q.release(ed)
+    reached
   }
 
   /** Bidirectional edge list with string node ids (`p:`/`s:` prefixed,
@@ -433,58 +486,11 @@ object Graph {
         |FROM md
         |GROUP BY 1
         |ORDER BY depth""".stripMargin) { (s, d) =>
-      val pairs = Tables.load(s, d, "lineitem")
-        .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
-        .transform(Q.snapshot)
-      val (root, rootStats) = Q.snapshotWith(
+      frontiers(s, d, Nil, 4) { ed =>
         ed.groupBy("src").agg(count(lit(1)).as("dg"))
           .orderBy(col("dg").desc, col("src")).limit(1)
-          .select(col("src").as("id"), lit(0L).as("depth")),
-        count(lit(1)))
-      // The visited set is only ever a LOOKUP for the anti-join, so it
-      // never needs its own snapshot: anti-join against the lazy union
-      // of the already-checkpointed per-hop frontiers. Snapshotting the
-      // growing union each hop (the round-12 shape) re-materialized the
-      // whole visited set 4× — O(V) checkpoint I/O per hop for zero
-      // correctness gain.
-      var frontiers = List(root)
-      var frontier = root
-      // frontier/visited rows are counted in each frontier's snapshot
-      // job (Q.snapshotWith; the count doubles as the emptiness probe
-      // below and as the broadcast row guard — frontiers and the
-      // visited union are node-bounded, so each hop's joins broadcast
-      // the node-sized side and the |edges| frame is never
-      // re-exchanged; above the guard bound hops degrade to the
-      // original shuffle joins)
-      var frontierRows = rootStats.getLong(0)
-      var reachedRows = frontierRows
-      var h = 1
-      // stop as soon as a frontier comes back empty — expanding an
-      // empty frontier can only yield empty frontiers, so remaining
-      // rounds are pure overhead (fires when the root's eccentricity
-      // is < the 4-hop cap; the count probe is observed in the
-      // frontier's snapshot job, not a second pass)
-      while (h <= 4 && frontierRows > 0) {
-        val visited0 = frontiers.reduce(_ unionAll _).select("id")
-        val visited =
-          if (reachedRows <= NodeStateBroadcastRows) broadcast(visited0) else visited0
-        val bf = Q.guardedBroadcast(frontier, frontierRows, NodeStateBroadcastRows)
-        val (nxt, nxtStats) = Q.snapshotWith(
-          ed.join(bf, ed("src") === bf("id"))
-            .select(col("dst").as("id")).distinct()
-            .join(visited, Seq("id"), "left_anti")
-            .select(col("id"), lit(h.toLong).as("depth")),
-          count(lit(1)))
-        frontiers = nxt :: frontiers
-        frontier = nxt
-        frontierRows = nxtStats.getLong(0)
-        reachedRows += frontierRows
-        h += 1
+          .select(col("src").as("id"), lit(0L).as("depth"))
       }
-      frontiers.reduce(_ unionAll _)
         .groupBy("depth").agg(count(lit(1)).as("n_nodes"))
         .orderBy("depth")
     },
@@ -674,39 +680,43 @@ object Graph {
     // dense-subgraph extraction that seeds community/spam/anomaly
     // mining. Each round removes EVERY node under degree 3
     // simultaneously (the distributed peel — sequential removal would
-    // serialize on the driver), so one round = one degree agg + one
-    // endpoint semi-filter on the checkpointed edge frame; the FIXED
-    // round count bounds the plan like q_pagerank's unrolled
-    // iterations (convergence inside the budget is asserted by
+    // serialize on the driver), so one round = one endpoint
+    // semi-filter on the checkpointed edge frame + one degree agg, and
+    // the (nodes, edges) readout is observed in the round's own
+    // snapshot job. The FIXED round count keeps the trajectory's
+    // length (convergence inside the budget is asserted by
     // InferenceSpec on the test graphs, and rounds after convergence
     // are exact no-ops — the trajectory makes that visible). Oracle:
     // the same 8 rounds unrolled as CTEs, generated by the same Scala
     // loop so the two sides cannot drift in round count. Counts only —
     // pure integer parity.
     Q("q_graph_kcore", kcoreOracle) { (s, d) =>
-      var e = coPairs(s, d).transform(Q.snapshot)
-      val rows = (1 to KcoreRounds).map { i =>
-        val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
+      import s.implicits._
+      val e = coPairs(s, d).transform(Q.snapshot)
+      def degrees(edges: DataFrame): DataFrame =
+        edges.select(explode(array(col("a"), col("b"))).as("node"))
           .groupBy("node").agg(count(lit(1)).as("dg"))
-        val (keep, keepStats) =
-          Q.snapshotWith(deg.filter(col("dg") >= KcoreK).select("node"), count(lit(1)))
-        // keep is node-sized: under the row guard both endpoint
-        // semi-filters broadcast it, so the edge frame never shuffles
-        // in a peel round — the only exchange left is the degree agg
-        // (r19, guide §3.1; the SMJ form exchanged e twice and keep
-        // twice per round). The count doubles as the row guard and as
-        // the round's n_nodes readout (same integer either way).
-        val nKeep = keepStats.getLong(0)
-        val bk = Q.guardedBroadcast(keep, nKeep, NodeStateBroadcastRows)
-        e = e
-          .join(bk.withColumnRenamed("node", "a"), "a")
-          .join(bk.withColumnRenamed("node", "b"), "b")
-          .select("a", "b").transform(Q.snapshot)
-        e.agg(count(lit(1)).as("n_edges"))
-          .select(lit(i.toLong).as("round"), lit(nKeep).as("n_nodes"),
-            col("n_edges"))
+      // The round state is the degree table of the surviving edges,
+      // observed as (2·edges, nodes of degree ≥ k). Peeling only
+      // removes, so the edges surviving round i are exactly the
+      // original edges with both endpoints in round i's keep set.
+      val run = Q.iterate(degrees(e), KcoreRounds,
+          coalesce(sum("dg"), lit(0L)), count(when(col("dg") >= KcoreK, 1))) { (deg, st) =>
+        // keep is node-sized and its row count is the observed keep
+        // count: under the row guard both endpoint semi-filters
+        // broadcast it, so the edge frame never shuffles in a peel
+        // round — the only exchange is the degree agg
+        val keep = Q.guardedBroadcast(
+          deg.filter(col("dg") >= KcoreK).select("node"), st.getLong(1), NodeStateBroadcastRows)
+        degrees(e
+          .join(keep.withColumnRenamed("node", "a"), "a")
+          .join(keep.withColumnRenamed("node", "b"), "b"))
       }
-      rows.reduce(_.unionAll(_)).orderBy("round")
+      Q.release(run.state)
+      Q.release(e)
+      run.stats.zip(run.stats.tail).zipWithIndex.map { case ((prev, cur), i) =>
+        (i + 1L, prev.getLong(1), cur.getLong(0) / 2)
+      }.toDF("round", "n_nodes", "n_edges")
     },
 
     // HITS hubs & authorities on the part→supplier bipartite graph
@@ -893,44 +903,11 @@ object Graph {
         |FROM md
         |GROUP BY 1
         |ORDER BY source_node""".stripMargin) { (s, d) =>
-      val pairs = Tables.load(s, d, "lineitem")
-        .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
-        .transform(Q.snapshot)
-      val roots = ed.groupBy("src").agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src")).limit(5)
-        .select(col("src").as("sid"))
-        .transform(Q.snapshot)
-      val (seed, seedStats) = Q.snapshotWith(
-        roots.select(col("sid"), col("sid").as("id"), lit(0L).as("depth")), count(lit(1)))
-      var frontiers = List(seed)
-      var frontier = seed
-      // same hop shape as q_graph_bfs (r19): the (sid, id) frontier and
-      // visited union are ≤ 5·|nodes| rows, so both broadcast under the
-      // row guard and the |edges| frame is never re-exchanged per hop
-      var frontierRows = seedStats.getLong(0)
-      var reachedRows = frontierRows
-      var h = 1
-      while (h <= 3 && frontierRows > 0) {
-        val visited0 = frontiers.reduce(_ unionAll _).select("sid", "id")
-        val visited =
-          if (reachedRows <= NodeStateBroadcastRows) broadcast(visited0) else visited0
-        val bf = Q.guardedBroadcast(frontier, frontierRows, NodeStateBroadcastRows)
-        val (nxt, nxtStats) = Q.snapshotWith(
-          ed.join(bf, ed("src") === bf("id"))
-            .select(col("sid"), col("dst").as("id")).distinct()
-            .join(visited, Seq("sid", "id"), "left_anti")
-            .withColumn("depth", lit(h.toLong)),
-          count(lit(1)))
-        frontiers = nxt :: frontiers
-        frontier = nxt
-        frontierRows = nxtStats.getLong(0)
-        reachedRows += frontierRows
-        h += 1
+      frontiers(s, d, Seq("sid"), 3) { ed =>
+        ed.groupBy("src").agg(count(lit(1)).as("dg"))
+          .orderBy(col("dg").desc, col("src")).limit(5)
+          .select(col("src").as("sid"), col("src").as("id"), lit(0L).as("depth"))
       }
-      frontiers.reduce(_ unionAll _)
         .groupBy(col("sid").as("source_node"))
         .agg(sum(when(col("depth") === 1, 1L).otherwise(0L)).as("reach_1"),
           sum(when(col("depth") === 2, 1L).otherwise(0L)).as("reach_2"),
@@ -983,36 +960,27 @@ object Graph {
         |GROUP BY 1
         |ORDER BY n_nodes DESC, community
         |LIMIT 20""".stripMargin) { (s, d) =>
-      val pairs = Tables.load(s, d, "lineitem")
-        .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val ed = pairs.select(col("p").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("p").as("dst")))
-        .transform(Q.snapshot)
-      val (lab0, labStats) = Q.snapshotWith(
-        ed.select(col("src").as("id")).distinct().select(col("id"), col("id").as("lbl")),
-        count(lit(1)))
-      var lab = lab0
-      // ONE count guards every round's broadcast hint (labels keep
-      // exactly one row per node). Round shape (r19, guide §3.1/§2.4):
-      // edges(BHJ over the broadcast labels) → repartition(nid) → both
-      // aggs ride that ONE exchange (HashPartitioning(nid) satisfies
-      // the (nid, lbl) clustering and the nid regroup), where the SMJ
-      // form exchanged edges + labels + (nid, lbl) + nid — measured
-      // 2.46 → 1.16 s for the three rounds at sf0.1. Identical integer
-      // counts and min_by decisions — order-free arithmetic.
-      val nNodes = labStats.getLong(0)
-      for (_ <- 1 to 3) {
-        val bl = Q.guardedBroadcast(lab, nNodes, NodeStateBroadcastRows)
-        lab = ed.join(bl, ed("src") === bl("id"))
+      val ed = int64Edges(s, d).transform(Q.snapshot)
+      // Round shape (guide §3.1/§2.4): edges(BHJ over the broadcast
+      // labels) → repartition(nid) → both aggs ride that ONE exchange
+      // (HashPartitioning(nid) satisfies the (nid, lbl) clustering and
+      // the nid regroup), where the SMJ form exchanged edges + labels +
+      // (nid, lbl) + nid — measured 2.46 → 1.16 s for the three rounds
+      // at sf0.1. Labels keep exactly one row per node, so each
+      // state's observed count guards the next round's broadcast.
+      val lab = Q.iterate(
+          ed.select(col("src").as("id")).distinct().select(col("id"), col("id").as("lbl")),
+          3, count(lit(1))) { (lab, st) =>
+        val bl = Q.guardedBroadcast(lab, st.getLong(0), NodeStateBroadcastRows)
+        ed.join(bl, ed("src") === bl("id"))
           .select(ed("dst").as("nid"), col("lbl"))
           .repartition(col("nid"))
           .groupBy(col("nid"), col("lbl"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("nid").as("id"))
           .agg(min_by(col("lbl"), struct((-col("c")).as("nc"), col("lbl").as("l"))).as("lbl"))
-          .transform(Q.snapshot)
-      }
+      }.state
+      Q.release(ed)
       lab.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("n_nodes").desc, col("community"))

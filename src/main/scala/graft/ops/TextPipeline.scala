@@ -414,7 +414,7 @@ object TextPipeline {
     * together with the row count, so the checksum costs no job.
     *
     * The label table keeps exactly one row per node in every round,
-    * so the seed's observed count guards every round's broadcast hint
+    * so each state's observed count guards the next round's broadcast hint
     * ([[graft.Q.guardedBroadcast]] under `Graph.NodeStateBroadcastRows`);
     * above the bound rounds shuffle-join. Measured on a 4-core box (CC
     * alone on the sf0.1 co-purchase pairs, 7 rounds): at local[4] 2.55
@@ -423,16 +423,15 @@ object TextPipeline {
     * 2.6 s) with or without the hint, so the hint is not what costs
     * there.
     *
-    * Durability: round snapshots are [[graft.Q.snapshot]]s — eager
-    * `localCheckpoint` on a single box, a reliable `checkpoint()` to
-    * shared storage (HDFS/S3) whenever the session has a checkpoint dir
-    * set, which is what a cluster deployment configures, because
-    * local blocks die with their executor. Either way, each round
-    * releases the superseded round's blocks ([[graft.Q.release]]), so
-    * block-manager footprint is O(graph), not O(graph × rounds); only
-    * the RETURNED labels stay materialized (caller-owned). */
-  private[graft] def connectedComponents(pairs: DataFrame, maxRounds: Int = 30): DataFrame =
-    connectedComponentsWithRounds(pairs, maxRounds)._1
+    * Durability: rounds run on [[graft.Q.iterate]], so each round state
+    * is a [[graft.Q.snapshot]] — eager `localCheckpoint` on a single
+    * box, a reliable `checkpoint()` to shared storage whenever the
+    * session has a checkpoint dir set, because local blocks die with
+    * their executor — and the superseded one is released. Block-manager
+    * footprint is O(graph), not O(graph × rounds); only the RETURNED
+    * labels stay materialized (caller-owned). */
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame =
+    connectedComponentsWithRounds(pairs)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds it
     * took to reach the checksum fixpoint (including the confirming
@@ -440,59 +439,42 @@ object TextPipeline {
     * round seeding plus path halving keep it small on near-dup and
     * co-purchase graphs, and a regression there would otherwise
     * surface only as a silent wall-clock multiple. */
-  private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, maxRounds: Int = 30): (DataFrame, Int) = {
-    // snapshot (not persist) every iteration state: persist only
-    // caches EXECUTION — the logical plan still nests every prior
-    // round, and with 3 self-references per round Catalyst would
-    // re-analyze an exponentially growing tree. Checkpointing replaces
-    // the plan with the materialized RDD, keeping per-round planning
-    // O(1).
+  private[graft] def connectedComponentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+    val maxRounds = 30
     val edges = Q.snapshot(
       pairs.select(col("d1").as("src"), col("d2").as("dst"))
         .union(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
-    // (checksum, node count) of each materialized label table
-    val stats = Seq(sum("lbl"), count(lit(1)))
     // seed labels with min(self, direct neighbors) — the first
     // propagation round fused into initialization (edges carry both
     // directions, so one groupBy sees every neighbor). For the common
     // near-dup graph of 2-3-node components this alone is the fixpoint,
     // leaving just the confirming round.
-    val (seed, seedStats) = Q.snapshotWith(
-      edges.select(col("src").as("id"), col("dst").as("lbl"))
-        .union(edges.select(col("src").as("id"), col("src").as("lbl")))
-        .groupBy("id").agg(min("lbl").as("lbl")),
-      stats: _*)
-    val nNodes = seedStats.getLong(1)
-    var labels = seed
-    var prev = Option(seedStats.get(0))
-    var converged = prev.isEmpty // no edges → nothing to propagate
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val cand = edges.select(col("src").as("k"), col("dst").as("x"))
-        .union(labels.select(col("lbl").as("k"), col("id").as("x")))
-      val lbl = Q.guardedBroadcast(labels, nNodes, Graph.NodeStateBroadcastRows)
-      val adopted = cand.join(lbl, col("k") === col("id"))
-        .select(col("x").as("id"), col("lbl"))
-      val (next, st) = Q.snapshotWith(
-        labels.union(adopted).groupBy("id").agg(min("lbl").as("lbl")), stats: _*)
-      val cur = Option(st.get(0))
-      converged = cur == prev
-      Q.release(labels) // superseded round state — next is materialized
-      labels = next
-      prev = cur
-      round += 1
-    }
+    val seed = edges.select(col("src").as("id"), col("dst").as("lbl"))
+      .union(edges.select(col("src").as("id"), col("src").as("lbl")))
+      .groupBy("id").agg(min("lbl").as("lbl"))
+    // stats: (checksum, node count); the count is the same every round
+    // and guards the round's label broadcast
+    val run = Q.iterate(seed, maxRounds, sum("lbl"), count(lit(1)))(
+      (labels, st) => {
+        val cand = edges.select(col("src").as("k"), col("dst").as("x"))
+          .union(labels.select(col("lbl").as("k"), col("id").as("x")))
+        val lbl = Q.guardedBroadcast(labels, st.getLong(1), Graph.NodeStateBroadcastRows)
+        val adopted = cand.join(lbl, col("k") === col("id"))
+          .select(col("x").as("id"), col("lbl"))
+        labels.union(adopted).groupBy("id").agg(min("lbl").as("lbl"))
+      },
+      // a null checksum is an empty seed: nothing to propagate
+      st => st.last.isNullAt(0) || st.size > 1 && st(st.size - 2).get(0) == st.last.get(0))
     Q.release(edges) // labels is materialized; the edge blocks are done
     // Hitting the round cap without the checksum fixpoint means the
     // labels are NOT component minima yet — returning them silently
     // would yield wrong cluster ids with no signal. The near-dup and
     // co-purchase graphs converge in ≤ 8 rounds; a long path with
     // shuffled ids can need more than 30 and then fails here.
-    if (!converged)
+    if (!run.stopped)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxRounds rounds")
-    (labels, round)
+    (run.state, run.rounds)
   }
 
   def defs: Seq[QueryDef] = Seq(

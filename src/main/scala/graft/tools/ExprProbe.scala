@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: print one query's raw (un-rounded) doubles as full-bit
@@ -11,15 +10,7 @@ import org.apache.spark.sql.functions._
 object ExprProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("4")
     val daily = graft.ops.Inference.dailyCounts(spark, sfDir)
       .filter(col("event_type") === "click")
     val rows = daily.orderBy("x").collect()

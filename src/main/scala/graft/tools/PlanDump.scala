@@ -93,15 +93,7 @@ object PlanDump {
 
   private def withSession(args: Seq[String])(dump: (SparkSession, String) => Unit): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("4")
     try dump(spark, sfDir) finally spark.stop()
   }
 

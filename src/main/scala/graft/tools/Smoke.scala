@@ -1,22 +1,13 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev smoke runner: mirrors the driver's t1 check (entry rows>0) and
   * basic contract invariants. Not part of the graded surface.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("4")
 
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time one query under the Bench session config (local[32],
   * 32 shuffle partitions) without paying for the full surface — the
@@ -13,16 +12,7 @@ object TimeQuery {
     val name = args.headOption.getOrElse("q_agg_hash")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // one untimed warmup absorbs session/codegen start-up cost
     SparkEntry.queries(name)(spark, sfDir).count()
     val times = (1 to reps).map { _ =>

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run the Verify dump for a SUBSET of queries, so
   * tools/check.py can gate just the operators being iterated on
   * without paying for the full surface.
@@ -15,15 +13,7 @@ object VerifySome {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, namesCsv) = args
     val names = namesCsv.split(',').map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

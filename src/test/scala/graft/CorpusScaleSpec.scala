@@ -158,10 +158,12 @@ class CorpusScaleSpec extends SparkSpec {
   test("q_dup_cluster_sizes: the second CC pass stays round-bounded on LSH-bounded edges at 10x") {
     // the op's scale story is (a) its edge set is the LSH candidate
     // graph (linear per the banding test above, never all-pairs) and
-    // (b) the CC loop converges in O(log diameter) rounds that do NOT
-    // grow with corpus size — both measured here on the planted-dup
-    // corpus (2-node components: fused seeding reaches fixpoint, one
-    // confirming round proves it)
+    // (b) the CC round count does NOT grow with corpus size on these
+    // components — both measured here on the planted-dup corpus
+    // (2-node components: fused seeding reaches fixpoint, one
+    // confirming round proves it). Rounds track component diameter,
+    // not corpus size: O(log diameter) only where ids grow along a
+    // chain, O(diameter) on a path whose ids are shuffled.
     val d1 = synthDir(300, hotPrefix = false)
     val d10 = synthDir(3000, hotPrefix = false)
     def rounds(d: String): Int =

@@ -199,8 +199,8 @@ class GraphScaleSpec extends SparkSpec {
     // graph iteratives plus representative users of the shared
     // Q.snapshot helper (markov's 3-iteration matrix frame,
     // interpurchase's multi-branch fact frame, the CC-based clusters)
-    for (q <- Seq("q_pagerank", "q_graph_kcore", "q_graph_bfs",
-        "q_markov_stationary", "q_interpurchase", "q_dup_clusters")) {
+    for (q <- Seq("q_pagerank", "q_graph_kcore", "q_graph_bfs", "q_graph_closeness",
+        "q_label_propagation", "q_markov_stationary", "q_interpurchase", "q_dup_clusters")) {
       val fn = SparkEntry.queries(q)
       val local = fn(spark, sfDir).collect().toSeq
       val ckptDir = tempDir(s"graft_reliable_ckpt_$q")

@@ -283,10 +283,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_dup_clusters label propagation converges in <= 3 rounds") {
-    // fused-first-round seeding + path halving make rounds O(log
-    // diameter); near-dup graphs are dominated by 2-3-node components,
-    // so seeding alone reaches the fixpoint and one confirming round
-    // proves it. A regression here (broken seeding, lost path halving)
+    // fused-first-round seeding + path halving keep rounds few where
+    // ids grow along a chain (a path with shuffled ids still takes
+    // O(diameter) rounds); near-dup graphs are dominated by 2-3-node
+    // components, so seeding alone reaches the fixpoint and one
+    // confirming round proves it. A regression here (broken seeding, lost path halving)
     // would otherwise surface only as a silent wall-clock multiple —
     // each round is a full join+agg job at 100 TB.
     val (_, rounds) = ops.TextPipeline.connectedComponentsWithRounds(

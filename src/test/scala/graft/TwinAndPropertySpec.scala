@@ -720,6 +720,33 @@ class TwinAndPropertySpec extends SparkSpec {
       s"superseded CC round state still persisted: ${leaked.size} RDDs")
   }
 
+  test("graph loops release the round state their result does not read") {
+    def persistedBy[T](body: => T): (T, Set[Int]) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = body
+      (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+    }
+    // the bound above, for the other two loops on Q.iterate: 3 label
+    // rounds and 8 peel rounds each snapshot a state, and only what
+    // the returned frame reads may stay persisted
+    for (name <- Seq("q_label_propagation", "q_graph_kcore")) {
+      val (rows, leaked) = persistedBy(q(name).collect())
+      assert(rows.nonEmpty, name)
+      info(s"$name: ${leaked.size} RDDs left persisted")
+      assert(leaked.size <= 2,
+        s"$name: superseded round state still persisted: ${leaked.size} RDDs")
+    }
+    // BFS and closeness read every hop's frontier; the edge snapshot
+    // the hops expand over is not read and must not stay
+    for (name <- Seq("q_graph_bfs", "q_graph_closeness")) {
+      val (df, leaked) = persistedBy(q(name))
+      val read = df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+      assert(leaked -- read === Set.empty[Int], s"$name: unread snapshots still persisted")
+    }
+  }
+
   test("connectedComponents with a reliable checkpoint dir matches the local path") {
     import spark.implicits._
     val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (7L, 8L)).toDF("d1", "d2")
