@@ -163,6 +163,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         val c = arity("pq_encode", 3)(children); PqEncode(c(0), c(1), c(2)) }))
     ext.injectFunction((
+      new FunctionIdentifier("holdout_hit"),
+      new ExpressionInfo(classOf[HoldoutHit].getName, "holdout_hit"),
+      (children: Seq[Expression]) => {
+        val c = arity("holdout_hit", 3)(children); HoldoutHit(c(0), c(1), c(2)) }))
+    ext.injectFunction((
       new FunctionIdentifier("zorder2"),
       new ExpressionInfo(classOf[ZOrder2].getName, "zorder2"),
       (children: Seq[Expression]) => {

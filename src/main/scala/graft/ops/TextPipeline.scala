@@ -154,20 +154,22 @@ object TextPipeline {
   private def withWords(df: DataFrame): DataFrame =
     df.withColumn("words", split(col("text"), " "))
 
-  /** Distinct 3-word shingles per doc: (doc_id, lang, shingle).
-    * transform(sequence(...)) is codegen'd; docs shorter than 3 words
-    * yield no shingles. Dedup happens IN-ROW with array_distinct
-    * (shingle duplicates only ever occur within one document), so no
-    * shuffle is spent on it — at 100 TB that saves a full pass. */
   /** The 3-word shingle ARRAY expression over a `words` column — the
-    * ONE home for the shingle construction, shared by the batch corpus
-    * pass below and the streaming decontam probe
-    * (streaming.Streams.decontamStream), so the two sides of the
-    * stream/batch decontam equivalence cannot drift (r12 review). */
+    * ONE home for the shingle construction in Spark SQL, shared by the
+    * batch corpus pass below and the incremental dedup stream.
+    * `transform(sequence(...), lambda)` is a `CodegenFallback`: the
+    * lambda runs interpreted once per shingle. The streaming decontam
+    * probe (functions.HoldoutHit) scans the text's bytes instead;
+    * TwinAndPropertySpec pins it against this expression. */
   private[graft] val ShingleArrayExpr: String =
     """array_distinct(transform(sequence(0, size(words) - 3),
       |               i -> concat_ws(' ', words[i], words[i+1], words[i+2])))""".stripMargin
 
+  /** Distinct 3-word shingles per doc: (doc_id, lang, shingle). Docs
+    * shorter than 3 words yield no shingles. Dedup happens IN-ROW with
+    * array_distinct (shingle duplicates only ever occur within one
+    * document), so no shuffle is spent on it — at 100 TB that saves a
+    * full pass. */
   private[graft] def shingles(s: SparkSession, d: String): DataFrame =
     withWords(Tables.load(s, d, "documents"))
       .filter(size(col("words")) >= 3)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 /** A typed event row — the engine's streaming record (the Spark-native
@@ -123,36 +122,26 @@ object Streams {
 
   /** Streaming benchmark decontamination — the streaming face of the
     * batch q_decontam (ops.Corpus): each incoming document is DROPPED if
-    * any of its 3-word shingles appears in the static holdout shingle
-    * set. The holdout is collapsed to one broadcast set row and probed
-    * with an in-row arrays_overlap — pure map-side, stateless, no
-    * shuffle of the stream, so ingest throughput is untouched. That in-
-    * row probe assumes the benchmark shingle set fits in executor
-    * memory (it does: benchmark suites are millions of n-grams, the
-    * corpus is the big side); for a holdout too wide for one in-memory
-    * set, run the batch shingle-level broadcast join inside
-    * foreachBatch instead.
-    *
-    * The holdout is grouped once, here at definition, into a local
-    * relation; each epoch broadcasts that local relation rather than
-    * re-running the grouping. The broadcast collected the same sets to
-    * the driver every epoch anyway, so the driver-memory bound is
-    * unchanged. A holdout that changes after definition is not seen. */
+    * any of its 3-word shingles appears in its language's holdout
+    * shingle set. The holdout is grouped once, here at definition, into
+    * per-language sets collected to the driver; each row is then probed
+    * in-row by the native `holdout_hit` expression (functions.HoldoutHit)
+    * — pure map-side, stateless, no join, no shuffle of the stream and
+    * no per-epoch job besides the sink's. The sets ride the plan as a
+    * literal, so a holdout that changes after definition is not seen.
+    * That in-row probe assumes the benchmark shingle set fits in driver
+    * and executor memory (it does: benchmark suites are millions of
+    * n-grams, the corpus is the big side); for a holdout too wide for
+    * one in-memory set, run the batch shingle-level broadcast join
+    * inside foreachBatch instead. Requires a session built with
+    * [[graft.functions.GraftExtensions]]. */
   def decontamStream(docs: DataFrame, holdoutShingles: DataFrame): DataFrame = {
     // same lang-scoped matching as the batch operator: one shingle set
-    // per language, joined on the lang key (still broadcast + map-side)
-    val grouped = holdoutShingles.groupBy("lang").agg(collect_set(col("shingle")).as("ho"))
-    val ho = holdoutShingles.sparkSession.createDataFrame(grouped.collect().toSeq.asJava, grouped.schema)
+    // per language; a null lang never matches, as in a join on lang
+    val sets = holdoutShingles.groupBy("lang").agg(collect_set(col("shingle"))).collect()
+      .collect { case r if !r.isNullAt(0) => r.getString(0) -> r.getSeq[String](1) }.toMap
     docs
-      .withColumn("words", split(col("text"), " "))
-      // the shingle construction is TextPipeline's — one home, so the
-      // stream probe and the batch q_decontam can never drift
-      .withColumn("shingles", expr(
-        s"""CASE WHEN size(words) >= 3
-           |     THEN ${graft.ops.TextPipeline.ShingleArrayExpr}
-           |     ELSE array() END""".stripMargin))
-      .join(broadcast(ho), Seq("lang"), "left")
-      .filter(col("ho").isNull || !arrays_overlap(col("shingles"), col("ho")))
+      .filter(!graft.functions.HoldoutHit.holdout_hit(col("text"), col("lang"), sets))
       .select("doc_id", "lang", "text")
   }
 

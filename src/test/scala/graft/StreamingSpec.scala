@@ -1722,6 +1722,60 @@ class StreamingSpec extends SparkSpec {
     assert(aggregates.isEmpty, s"holdout grouping left in the per-epoch plan:\n$plan")
   }
 
+  test("decontamStream's plan holds no join and prints no holdout shingle") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.FormattedMode
+    import spark.implicits._
+    val holdout = Seq(("en", "the quick fox"), ("fr", "a clean document")).toDF("lang", "shingle")
+    val docs = spark.read.format("graft-docs").option("rows", 3).load()
+    val qe = Streams.decontamStream(docs, holdout).queryExecution
+    val plan = qe.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, s"join in the per-epoch plan:\n$plan")
+    assert(plan.collect { case a: Aggregate => a }.isEmpty, s"aggregate in the per-epoch plan:\n$plan")
+    // the SQL status store keeps every epoch's plan description
+    for (text <- Seq(plan.toString, qe.executedPlan.toString, qe.explainString(FormattedMode)))
+      assert(!text.contains("clean document") && text.contains("holdout_hit"), text)
+  }
+
+  test("a graft-docs → decontamStream → ledger sink epoch runs one Spark job") {
+    import org.apache.spark.sql.functions._
+    import graft.streaming.OffsetLedger
+    val sc = spark.sparkContext
+    val epochs = 3
+    val rowsPerBatch = 400
+    // the holdout: every shingle of the first 40 documents of the id range
+    val holdout = spark.read.format("graft-docs").option("rows", 40).load()
+      .withColumn("words", split(col("text"), " "))
+      .filter(size(col("words")) >= 3)
+      .select(col("lang"), explode(expr(ops.TextPipeline.ShingleArrayExpr)).as("shingle"))
+    val source = spark.readStream.format("graft-docs")
+      .option("rows", epochs * rowsPerBatch).option("topicPartitions", 4)
+      .option("partitions", 4).option("rowsPerBatch", rowsPerBatch).load()
+    val ledgerDir = tempDir("graft_decontam_jobs_ledger")
+    val q = Streams.decontamStream(source, holdout)
+      .select(col("doc_id").as("event_id"), col("lang"), col("text"))
+      .writeStream
+      .option("checkpointLocation", tempDir("graft_decontam_jobs_ckpt"))
+      .foreachBatch(OffsetLedger.sink(tempDir("graft_decontam_jobs_out"), ledgerDir) _)
+      .start()
+    withQuery(q)(q.processAllAvailable())
+    // the status store is fed by the listener bus in event order: once a
+    // job started after the query is visible, so are the query's jobs
+    val fence = s"decontam_jobs_fence_${q.runId}"
+    sc.setJobGroup(fence, "fence")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(fence).length === 1)
+    val ledger = OffsetLedger.read(spark, ledgerDir)
+    assert(ledger.count() === epochs)
+    assert(ledger.agg(sum("n_rows")).head().getLong(0) < epochs * rowsPerBatch,
+      "the holdout documents are dropped")
+    // StreamExecution runs every epoch under the query's run id
+    assert(sc.statusTracker.getJobIdsForGroup(q.runId.toString).length === epochs)
+  }
+
   test("streaming dow-profile counts agree with the batch q_seasonality grid") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -556,6 +558,94 @@ class TwinAndPropertySpec extends SparkSpec {
     val flagged = q("q_decontam").select("doc_id").as[Long].collect().toSet
     val trainIds = train.select("doc_id").as[Long].collect().toSet
     assert(keptByStream === (trainIds -- flagged))
+  }
+
+  /** The built-in formulation of streaming decontamination, the
+    * reference for `decontamStream`'s in-row kernel: each document's
+    * distinct shingle array (TextPipeline.ShingleArrayExpr, empty below
+    * 3 words) is probed with arrays_overlap against its language's
+    * collected holdout set, reached through a broadcast lang join. */
+  private def decontamByShingleArrays(docs: DataFrame, holdoutShingles: DataFrame): DataFrame = {
+    val ho = holdoutShingles.groupBy("lang").agg(collect_set(col("shingle")).as("ho"))
+    docs
+      .withColumn("words", split(col("text"), " "))
+      .withColumn("shingles", expr(
+        s"""CASE WHEN size(words) >= 3
+           |     THEN ${ops.TextPipeline.ShingleArrayExpr}
+           |     ELSE array() END""".stripMargin))
+      .join(broadcast(ho), Seq("lang"), "left")
+      .filter(col("ho").isNull || !arrays_overlap(col("shingles"), col("ho")))
+      .select("doc_id", "lang", "text")
+  }
+
+  private def keptIds(df: DataFrame): Set[Long] = {
+    import spark.implicits._
+    df.select("doc_id").as[Long].collect().toSet
+  }
+
+  test("decontamStream keeps the docs the shingle-array formulation keeps on the corpus") {
+    import spark.implicits._
+    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "lang", "text")
+    // a seeded 5% of the documents donate every shingle to the holdout;
+    // collected once so both formulations probe identical rows
+    val ids = docs.select("doc_id").as[Long].collect().sorted
+    val donors = new scala.util.Random(20261019).shuffle(ids.toSeq).take(ids.length / 20)
+    val holdout = ops.TextPipeline.shingles(spark, sfDir)
+      .filter(col("doc_id").isin(donors: _*)).select("lang", "shingle")
+    val held = spark.createDataFrame(holdout.collect().toSeq.asJava, holdout.schema)
+    val byKernel = keptIds(streaming.Streams.decontamStream(docs, held))
+    val byArrays = keptIds(decontamByShingleArrays(docs, held))
+    assert(byKernel === byArrays)
+    // not vacuous: the donors themselves and more are dropped, most kept
+    val dropped = ids.toSet -- byKernel
+    assert(donors.toSet.subsetOf(dropped) && dropped.size > donors.size && byKernel.nonEmpty,
+      s"dropped ${dropped.size} of ${ids.length} for ${donors.size} donors")
+  }
+
+  test("decontamStream matches the shingle-array formulation on tokenization edge cases") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val docs = Seq[(Long, String, String)](
+      (1L, "en", ""),
+      (2L, "en", "two words"),
+      (3L, "en", "three word text"), // exactly 3 words, held out
+      (4L, "en", "other three words"), // exactly 3 words, not held out
+      (5L, "en", " lead space here"), // words "", lead, space, here
+      (6L, "en", "x y z "), // trailing empty word: shingle "y z "
+      (7L, "en", "a  b c"), // double space: shingles "a  b", " b c" — never "a b c"
+      (8L, "en", "c  d"), // 2 visible words, 3 split words: shingle "c  d"
+      (9L, "en", "p\tq r s"), // a tab is not a separator: "p\tq r s" only
+      (10L, "en", "café naïve 日本語 text"),
+      (11L, "en", "日本語 über straße"),
+      (12L, "en", "la la la la la"), // one shingle repeated three times
+      (13L, "en", "lo lo lo lo"),
+      (14L, "en", null),
+      (15L, null, "the quick fox"),
+      (16L, "de", "the quick fox"), // lang absent from the holdout
+      (17L, "fr", "un deux trois quatre"),
+      (18L, "fr", "quatre cinq six"),
+      (19L, "es", "uno dos tres"), // the lang's only holdout shingle is null
+      (20L, "en", "the quick fox"))
+    val holdout = Seq[(String, String)](
+      ("en", "three word text"), ("en", " lead space"), ("en", "y z "),
+      ("en", "a b c"), ("en", "c  d"), ("en", "q r s"), ("en", "naïve 日本語 text"),
+      ("en", "la la la"), ("en", "the quick fox"), ("en", "two words"),
+      ("fr", null), ("fr", "un deux trois"), ("es", null))
+    val docSchema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("lang", StringType), StructField("text", StringType)))
+    val hoSchema = StructType(Seq(StructField("lang", StringType), StructField("shingle", StringType)))
+    val held = spark.createDataFrame(holdout.map { case (l, s) => Row(l, s) }.asJava, hoSchema)
+    val expected = Set(1L, 2L, 4L, 7L, 9L, 11L, 13L, 14L, 15L, 16L, 18L, 19L)
+    // a local relation is filtered by the optimizer's interpreted eval;
+    // an RDD-backed frame runs the generated code
+    val rows = docs.map { case (i, l, t) => Row(i, l, t) }
+    val local = spark.createDataFrame(rows.asJava, docSchema)
+    val distributed = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), docSchema)
+    for ((path, frame) <- Seq("interpreted" -> local, "codegen" -> distributed)) {
+      val byKernel = keptIds(streaming.Streams.decontamStream(frame, held))
+      assert(byKernel === keptIds(decontamByShingleArrays(frame, held)), path)
+      assert(byKernel === expected, path)
+    }
   }
 
   test("bloom decontam has no false negatives vs exact q_decontam") {
