@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -102,6 +102,24 @@ private[sources] class KvTable(options: CaseInsensitiveStringMap)
 private[sources] case class KvCommitMessage(stagedPath: String, rows: Long)
     extends WriterCommitMessage
 
+/** The per-job staging directory the engine's file sinks write into
+  * before their commit renames: `<target>/_staging/<queryId>/`. The `_`
+  * prefix, with no `=` in the name, hides it from Spark's file listing
+  * and partition discovery and from pyarrow. */
+private[sources] object Staging {
+  def dir(path: String, queryId: String): Path = Paths.get(path, "_staging", queryId)
+
+  /** Deletes one job's staged files and directory, and the `_staging`
+    * root once it is empty: a sibling job's staged files are not ours to
+    * remove. */
+  def delete(path: String, queryId: String): Unit = {
+    val staging = dir(path, queryId).toFile
+    Option(staging.listFiles()).foreach(_.foreach(_.delete()))
+    staging.delete()
+    new File(path, "_staging").delete() // removes the root only when empty
+  }
+}
+
 private[sources] object KvBatchWrite {
   /** Per-lock-path monitors: same-JVM committers must serialize BEFORE
     * touching the POSIX lock (see [[KvBatchWrite.withManifestLock]]). */
@@ -117,10 +135,8 @@ private[sources] class KvBatchWrite(path: String, queryId: String,
   // the same target can no longer delete each other's staged files at
   // commit time (r12 review). A crashed job's staging subdir lingers
   // until manually cleaned — hidden, unmanifested, invisible to readers.
-  private def stagingDir = Paths.get(path, "_staging", queryId)
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(stagingDir)
+    Files.createDirectories(Staging.dir(path, queryId))
     new KvWriterFactory(path, queryId, failPartition)
   }
 
@@ -174,7 +190,7 @@ private[sources] class KvBatchWrite(path: String, queryId: String,
             new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
               .split("\n").filter(_.nonEmpty).toSeq
           else Seq.empty
-        val tmp = Paths.get(path, "_staging", queryId, s"_SUCCESS.tmp")
+        val tmp = Staging.dir(path, queryId).resolve("_SUCCESS.tmp")
         Files.write(tmp,
           (prior ++ entries).sorted.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
         // POSIX rename replaces an existing manifest atomically; after
@@ -185,10 +201,10 @@ private[sources] class KvBatchWrite(path: String, queryId: String,
       unpublish()
       throw e
     }
-    deleteStaging()
+    Staging.delete(path, queryId)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteStaging()
+  override def abort(messages: Array[WriterCommitMessage]): Unit = Staging.delete(path, queryId)
 
   /** Serializes the manifest read-merge-move across committers with an
     * OS advisory lock (`FileChannel.tryLock`) instead of the r12
@@ -239,15 +255,6 @@ private[sources] class KvBatchWrite(path: String, queryId: String,
       } finally ch.close()
     }
   }
-
-  private def deleteStaging(): Unit = {
-    // only THIS job's staging subdir — a sibling append's staged files
-    // are not ours to remove
-    val staging = stagingDir.toFile
-    Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-    staging.delete()
-    new File(path, "_staging").delete() // removes the root only when empty
-  }
 }
 
 private[sources] class KvWriterFactory(path: String, queryId: String,
@@ -261,8 +268,7 @@ private[sources] class KvWriter(path: String, queryId: String, partitionId: Int,
                                 taskId: Long, failPartition: Option[Int])
     extends DataWriter[InternalRow] {
 
-  private val staged =
-    Paths.get(path, "_staging", queryId, s"part-$queryId-$partitionId-$taskId")
+  private val staged = Staging.dir(path, queryId).resolve(s"part-$queryId-$partitionId-$taskId")
   private val out = Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
   private var rows = 0L
 

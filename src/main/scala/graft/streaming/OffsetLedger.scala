@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * transactionally per epoch inside foreachBatch.
   *
   * Idempotence: foreachBatch may replay an epoch after a crash. The sink
-  * writes data keyed by epoch (overwrite => replay-safe) and commits the
-  * ledger row LAST; a replayed epoch that already has a ledger row is
-  * skipped entirely. This is the same commit ordering the reference used
-  * (data first, then ZK offset write).
+  * writes data keyed by epoch (a replay clears and rewrites the epoch's
+  * directory) and commits the ledger row LAST; a replayed epoch that
+  * already has a ledger row is skipped entirely. This is the same commit
+  * ordering the reference used (data first, then ZK offset write).
   */
 object OffsetLedger {
 
@@ -32,32 +32,51 @@ object OffsetLedger {
 
   /** foreachBatch body: idempotent epoch-keyed data write + ledger commit.
     * Usage: ds.writeStream.foreachBatch(OffsetLedger.sink(out, ledger) _)
-    */
+    *
+    * The epoch's rows land as parquet in `outDir/epoch=N`, written by the
+    * engine's `graft-parquet` DataSource V2 writer
+    * ([[graft.sources.ParquetSink]]), not by Spark's Hadoop file
+    * committer. So:
+    *  - `outDir` is a local `java.nio` path, like `ledgerDir` (no
+    *    `file:` or other Hadoop URI);
+    *  - an epoch directory holds only `part-*.parquet` files: no
+    *    `_SUCCESS` and no `.crc` files;
+    *  - part files are staged under the epoch's hidden `_staging`
+    *    directory, which neither the `epoch=*` glob nor partition
+    *    discovery sees, and renamed into the epoch directory when the
+    *    write job commits;
+    *  - the codec follows the session's
+    *    `spark.sql.parquet.compression.codec`;
+    *  - the ledger marker, written last, is the epoch's commit point: a
+    *    replay of a marked epoch is skipped, and a replay of an unmarked
+    *    one clears `outDir/epoch=N` (staging included) and rewrites it.
+    * Spark's parquet reader reads `outDir/epoch=*` back with the same
+    * schema and rows as a plain parquet write of each epoch would give. */
   def sink(outDir: String, ledgerDir: String)(df: DataFrame, epochId: Long): Unit =
     sinkImpl(outDir, ledgerDir, None)(df, epochId)
 
-  /** [[sink]] with the crash-window test hook: `haltAfterDataForEpoch`
-    * hard-kills the JVM (Runtime.halt — no shutdown hooks, no finally;
-    * SIGKILL semantics from inside) right between the epoch's data
-    * write and its marker commit, the exact window a real crash can
-    * hit. tools.SoakCrash drives it in a child JVM and then audits the
-    * replay-overwrite recovery from a fresh process. */
+  /** [[sink]] with the test hooks. `haltAfterDataForEpoch` hard-kills
+    * the JVM (Runtime.halt — no shutdown hooks, no finally; SIGKILL
+    * semantics from inside) right between the epoch's data write and
+    * its marker commit, the exact window a real crash can hit.
+    * tools.SoakCrash drives it in a child JVM and then audits the
+    * replay recovery from a fresh process. `failPartition` makes that
+    * partition's first write attempt for `outDir` throw
+    * (`graft-parquet`'s test option). */
   private[graft] def sinkImpl(outDir: String, ledgerDir: String,
-                              haltAfterDataForEpoch: Option[Long])
+                              haltAfterDataForEpoch: Option[Long],
+                              failPartition: Option[Int] = None)
                              (df: DataFrame, epochId: Long): Unit =
-    commitEpoch(ledgerDir, haltAfterDataForEpoch, df, epochId, "event_id") {
-      // epoch-keyed OVERWRITE: a replay rewrites the same directory
-      _.write.mode(SaveMode.Overwrite).parquet(s"$outDir/epoch=$epochId")
-    }
+    commitEpoch(outDir, ledgerDir, haltAfterDataForEpoch, df, epochId, "event_id",
+      "graft-parquet", failPartition.map(p => "failPartition" -> p.toString).toMap)
 
   /** foreachBatch body for the graft-kv 2PC sink — the exactly-once
     * recipe when the epoch store is the custom DSv2 table rather than
-    * parquet. kv is append-only with job-unique file names, so the
-    * parquet sink's epoch-keyed OVERWRITE idempotence doesn't apply;
-    * instead each epoch owns a SUB-TABLE (`out/epoch=N`) and a replay
-    * without a marker first clears that sub-table, then re-runs the kv
-    * job (whose own 2PC guarantees readers-of-the-manifest never see a
-    * half-written epoch), then commits the marker — closing the
+    * parquet. kv is append-only with job-unique file names, so each
+    * epoch owns a SUB-TABLE (`out/epoch=N`) and, as for [[sink]], a
+    * replay without a marker first clears that sub-table, then re-runs
+    * the kv job (whose own 2PC guarantees readers-of-the-manifest never
+    * see a half-written epoch), then commits the marker — closing the
     * crash-between-kv-commit-and-marker window that plain append would
     * turn into duplicates. Marker-present replays skip entirely, as in
     * [[sink]]. Content per epoch is deterministic, so clear-and-rewrite
@@ -79,54 +98,57 @@ object OffsetLedger {
     * child JVM and audits the replay from a fresh process. */
   private[graft] def kvSinkImpl(outDir: String, ledgerDir: String,
                                 haltAfterDataForEpoch: Option[Long])
-                               (df: DataFrame, epochId: Long): Unit = {
-    val epochPath = Paths.get(outDir, s"epoch=$epochId")
-    commitEpoch(ledgerDir, haltAfterDataForEpoch, df, epochId, "key") { observed =>
-      if (Files.isDirectory(epochPath)) { // uncommitted remnant of a crashed attempt
-        // _SUCCESS goes FIRST: the reverse-path walk below deletes
-        // `part-*` before `_SUCCESS` ('p' sorts after '_'), so a reader
-        // polling the manifest mid-replay could observe _SUCCESS listing
-        // already-deleted part files — a transient breach of "readers of
-        // the manifest never see a half-written epoch". Removing the
-        // manifest makes the epoch invisible to manifest-gated readers
-        // before any data file disappears.
-        Files.deleteIfExists(epochPath.resolve("_SUCCESS"))
-        // Files.walk holds open directory handles — close it, or a job
-        // cycling through crash-replays (this sink's whole purpose)
-        // leaks fds until GC
-        val walk = Files.walk(epochPath)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-        finally walk.close()
-      }
-      observed.write.format("graft-kv")
-        .option("path", epochPath.toString).mode(SaveMode.Append).save()
+                               (df: DataFrame, epochId: Long): Unit =
+    commitEpoch(outDir, ledgerDir, haltAfterDataForEpoch, df, epochId, "key", "graft-kv", Map.empty)
+
+  /** Removes what an uncommitted attempt left in an epoch directory. */
+  private def clearEpoch(epochPath: Path): Unit =
+    if (Files.isDirectory(epochPath)) {
+      // _SUCCESS goes FIRST: the reverse-path walk below deletes
+      // `part-*` before `_SUCCESS` ('p' sorts after '_'), so a reader
+      // polling a kv manifest mid-replay could observe _SUCCESS listing
+      // already-deleted part files — a transient breach of "readers of
+      // the manifest never see a half-written epoch". Removing the
+      // manifest makes the epoch invisible to manifest-gated readers
+      // before any data file disappears.
+      Files.deleteIfExists(epochPath.resolve("_SUCCESS"))
+      // Files.walk holds open directory handles — close it, or a job
+      // cycling through crash-replays (this sink's whole purpose)
+      // leaks fds until GC
+      val walk = Files.walk(epochPath)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
     }
-  }
 
   /** The epoch commit both sinks share, in this order: skip an epoch
-    * whose marker exists (a replay of a committed epoch), run
-    * `writeData` (which must be replay-safe) on the epoch's frame, read
-    * the epoch's row count and `idCol` max/min, fire the crash-window
-    * halt hook, and commit the ledger marker last. The stats are
-    * observed in the write's own job (`Dataset.observe`), so they
-    * describe exactly the rows written and cost no extra pass over the
-    * epoch. The observation sits in the write's result stage — neither
-    * sink adds an exchange — and Spark merges a result stage's
-    * accumulators once per partition, so a retried task cannot count
-    * twice. */
-  private def commitEpoch(ledgerDir: String, haltAfterDataForEpoch: Option[Long],
-                          df: DataFrame, epochId: Long, idCol: String)
-                         (writeData: DataFrame => Unit): Unit = {
+    * whose marker exists (a replay of a committed epoch), clear what an
+    * uncommitted attempt left in `outDir/epoch=N`, append the epoch's
+    * frame there through the `format` DataSource V2 writer, read the
+    * epoch's row count and `idCol` max/min, fire the crash-window halt
+    * hook, and commit the ledger marker last. The stats are observed in
+    * the write's own job (`Dataset.observe`), so they describe exactly
+    * the rows written and cost no extra pass over the epoch. The
+    * observation sits in the write's result stage — neither sink adds
+    * an exchange — and Spark merges a result stage's accumulators once
+    * per partition, so a retried task cannot count twice. */
+  private def commitEpoch(outDir: String, ledgerDir: String,
+                          haltAfterDataForEpoch: Option[Long],
+                          df: DataFrame, epochId: Long, idCol: String,
+                          format: String, options: Map[String, String]): Unit = {
     Files.createDirectories(Paths.get(ledgerDir))
     val marker = ledgerRowPath(ledgerDir, epochId)
     if (Files.exists(marker)) return // replayed epoch: already committed, skip
+    val epochPath = Paths.get(outDir, s"epoch=$epochId")
+    clearEpoch(epochPath) // uncommitted remnant of a crashed attempt
     val obs = Observation()
     // data first ...
-    writeData(df.observe(obs,
-      count(lit(1)).cast("long").as("n_rows"),
-      coalesce(max(col(idCol)), lit(-1L)).as("max_id"),
-      coalesce(min(col(idCol)), lit(-1L)).as("min_id")))
+    df.observe(obs,
+        count(lit(1)).cast("long").as("n_rows"),
+        coalesce(max(col(idCol)), lit(-1L)).as("max_id"),
+        coalesce(min(col(idCol)), lit(-1L)).as("min_id"))
+      .write.format(format).options(options)
+      .option("path", epochPath.toString).mode(SaveMode.Append).save()
     val stats = obs.get
     if (haltAfterDataForEpoch.contains(epochId))
       Runtime.getRuntime.halt(137) // simulated kill -9 in the data→marker window

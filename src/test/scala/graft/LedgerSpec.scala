@@ -169,6 +169,93 @@ class LedgerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$outDir/epoch=1").count() === 2L)
   }
 
+  /** Every file and directory under `dir`, relative to it. */
+  private def tree(dir: String): Seq[String] = {
+    val walk = Files.walk(Paths.get(dir))
+    try walk.iterator().asScala.map(p => Paths.get(dir).relativize(p).toString).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("the parquet sink reads back like df.write.parquet: schema, nullability and rows") {
+    val frame = spark.sql(
+      """SELECT * FROM VALUES
+        |  (1L, 'a', 1.5D, CAST(12.34 AS DECIMAL(10, 2)), DATE'2024-02-29',
+        |   TIMESTAMP'2024-02-29 12:34:56.789', array(1, NULL, 3),
+        |   map('k', 1.0D, 'n', CAST(NULL AS DOUBLE)), named_struct('x', 7, 'y', 'q')),
+        |  (2L, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+        |  (3L, '', -0.0D, CAST(-99999999.99 AS DECIMAL(10, 2)), DATE'1900-01-01',
+        |   TIMESTAMP'1900-01-01 00:00:00', array(), map(), named_struct('x', NULL, 'y', NULL))
+        |AS t(event_id, s, d, dec, dt, ts, arr, m, st)""".stripMargin)
+      // a non-nullable column next to the nullable ones
+      .withColumn("k", lit(7L))
+    assert(!frame.schema("k").nullable && frame.schema("s").nullable)
+    val outDir = tempDir("graft_twin_out")
+    val ref = tempDir("graft_twin_ref")
+    OffsetLedger.sink(outDir, tempDir("graft_twin_led"))(frame, 0L)
+    frame.write.mode("overwrite").parquet(ref)
+    val got = spark.read.parquet(s"$outDir/epoch=0")
+    val want = spark.read.parquet(ref)
+    assert(got.schema === want.schema)
+    assert(got.schema.map(_.nullable) === want.schema.map(_.nullable))
+    assert(got.orderBy("event_id").collect().toSeq === want.orderBy("event_id").collect().toSeq)
+    // Spark's reader relaxes every column to nullable, so compare the
+    // files themselves: parquet schema (required vs optional), Spark's
+    // row metadata and the codec
+    def footer(dir: String) = {
+      val part = Paths.get(dir, tree(dir).filter(n => n.startsWith("part-") && n.endsWith(".parquet")).head)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(part))
+      try {
+        val meta = reader.getFooter
+        (meta.getFileMetaData.getSchema,
+          meta.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+          meta.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+      } finally reader.close()
+    }
+    assert(footer(s"$outDir/epoch=0") === footer(ref))
+    // only part files: no _SUCCESS, no .crc, no staging left behind
+    assert(tree(s"$outDir/epoch=0").filter(_.nonEmpty)
+      .forall(n => n.startsWith("part-") && n.endsWith(".parquet")), tree(s"$outDir/epoch=0"))
+  }
+
+  test("a parquet sink task failing its first attempt leaves each row once and no staged file") {
+    val outDir = tempDir("graft_taskfail_out")
+    val ledgerDir = tempDir("graft_taskfail_led")
+    val batch = spark.range(0, 1000, 1, 4).select(col("id").as("event_id"), col("id").cast("string").as("text"))
+    def write(): Unit = OffsetLedger.sinkImpl(outDir, ledgerDir, None, failPartition = Some(1))(batch, 0L)
+    // with task retries the retried attempt commits in the same job;
+    // without them (local[N]) the job aborts and the replay rewrites
+    scala.util.Try(within(2.minutes)(write())).failed.foreach { e =>
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected failure in partition 1")), e)
+      assert(OffsetLedger.lastCommittedEpoch(ledgerDir).isEmpty, "no marker after an aborted write")
+      assert(!tree(outDir).exists(_.contains("_staging")), s"abort left staged files: ${tree(outDir)}")
+      within(2.minutes)(write())
+    }
+    val ids = spark.read.parquet(s"$outDir/epoch=0").select("event_id").collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq === (0L until 1000L), "each row exactly once")
+    assert(!tree(outDir).exists(_.contains("_staging")), tree(outDir))
+    assert(marker(ledgerDir, 0L).contains("\"n_rows\":1000,"))
+  }
+
+  test("a killed job's staged parquet is invisible to epoch=* readers and its replay removes it") {
+    import spark.implicits._
+    val outDir = tempDir("graft_staged_out")
+    val ledgerDir = tempDir("graft_staged_led")
+    OffsetLedger.sink(outDir, ledgerDir)(Seq((1L, "a"), (2L, "b")).toDF("event_id", "text"), 0L)
+    // what a job killed mid-write leaves for epoch 1: a staged, complete
+    // part file under the epoch's hidden staging dir, and no marker
+    val staged = Paths.get(outDir, "epoch=1", "_staging", java.util.UUID.randomUUID().toString)
+    Files.createDirectories(staged)
+    val part0 = tree(s"$outDir/epoch=0").filter(_.startsWith("part-")).head
+    Files.copy(Paths.get(outDir, "epoch=0", part0), staged.resolve(part0))
+    def ids(): Seq[Long] = spark.read.parquet(s"$outDir/epoch=*").select("event_id").as[Long].collect().toSeq.sorted
+    assert(ids() === Seq(1L, 2L), "staged rows must not be visible")
+    OffsetLedger.sink(outDir, ledgerDir)(Seq((3L, "c")).toDF("event_id", "text"), 1L)
+    assert(ids() === Seq(1L, 2L, 3L))
+    assert(!tree(outDir).exists(_.contains("_staging")), tree(outDir))
+    assert(OffsetLedger.lastCommittedEpoch(ledgerDir) === Some(1L))
+  }
+
   /** The two ledger sinks, each with the column pair it ledgers: the
     * parquet sink takes its stats from `event_id`, the kv sink from
     * `key` (and graft-kv requires exactly `(key, value)`). */

@@ -172,6 +172,18 @@ class SurveyContractSpec extends AnyFunSuite {
     assert(listed -- defined === Set.empty[String], "README lists tools that do not exist")
   }
 
+  test("OffsetLedger writes epoch data through the engine's writers, not Spark's parquet committer") {
+    // The ledger marker is each epoch's commit point and graft-parquet
+    // stages and renames the epoch's files itself; a `.parquet(` or
+    // `SaveMode.Overwrite` data write would bring back the Hadoop
+    // FileOutputCommitter and its per-task configuration, _SUCCESS and
+    // .crc files.
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/streaming/OffsetLedger.scala")), "UTF-8")
+    assert(!src.contains(".parquet("), "OffsetLedger writes through DataFrameWriter.parquet")
+    assert(!src.contains("SaveMode.Overwrite"), "OffsetLedger overwrites through SaveMode.Overwrite")
+  }
+
   test("Streams holds no pure pass-through to an ops read-time fold") {
     // A read-time fold lives in ops and callers use it there; a Streams
     // def whose whole body hands its grid to one graft.ops function is
