@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.streaming.NioCheckpointFileManager
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -123,7 +125,9 @@ object CosineSim {
 }
 
 /** SparkSessionExtensions entry point: registers graft's native
-  * expressions for both SQL and Column use. Activate with
+  * expressions for both SQL and Column use, and makes
+  * [[graft.streaming.NioCheckpointFileManager]] the streaming checkpoint
+  * manager of the context the session is built on. Activate with
   * .config("spark.sql.extensions", "graft.functions.GraftExtensions").
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -137,6 +141,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // A default, not an override: Spark resolves the manager from
+    // newHadoopConf(), which lays the session's SQL conf over this Hadoop
+    // conf, so a class named in the session or the Hadoop conf still wins.
+    // Extensions are applied while the builder's context is active.
+    SparkContext.getOrCreate().hadoopConfiguration.setIfUnset(
+      NioCheckpointFileManager.ClassKey, classOf[NioCheckpointFileManager].getName)
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),

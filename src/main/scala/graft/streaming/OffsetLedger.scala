@@ -1,10 +1,11 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference capability this engine exists to generalize: resumable,
@@ -15,9 +16,15 @@ import org.apache.spark.sql.functions._
   * stream, and writes it back after each batch. Structured Streaming
   * subsumes the resume half with its checkpoint WAL (offsets/N written
   * before batch N executes, commits/N after), so exactly-once-ish resume
-  * is free. What the WAL does NOT give you is a queryable, external
-  * ledger — this object adds that: a parquet ledger table written
-  * transactionally per epoch inside foreachBatch.
+  * is free. In sessions built with [[graft.functions.GraftExtensions]]
+  * those files go through the engine's [[NioCheckpointFileManager]]: the
+  * same atomic, never-overwriting create as Spark's `FileContext`
+  * manager, done with `java.nio` calls, so a local checkpoint costs no
+  * Hadoop shell-out (`readlink`/`chmod` forks where the native Hadoop
+  * library is absent) and no `.crc` file per WAL entry. What the WAL
+  * does NOT give you is a queryable, external ledger — this object adds
+  * that: a parquet ledger table written transactionally per epoch
+  * inside foreachBatch.
   *
   * Idempotence: foreachBatch may replay an epoch after a crash. The sink
   * writes data keyed by epoch (a replay clears and rewrites the epoch's
@@ -112,13 +119,7 @@ object OffsetLedger {
       // manifest makes the epoch invisible to manifest-gated readers
       // before any data file disappears.
       Files.deleteIfExists(epochPath.resolve("_SUCCESS"))
-      // Files.walk holds open directory handles — close it, or a job
-      // cycling through crash-replays (this sink's whole purpose)
-      // leaks fds until GC
-      val walk = Files.walk(epochPath)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
+      NioCheckpointFileManager.deleteTree(epochPath)
     }
 
   /** The epoch commit both sinks share, in this order: skip an epoch
@@ -167,51 +168,45 @@ object OffsetLedger {
 
   private val LedgerSchema = "epoch_id LONG, n_rows LONG, max_event_id LONG, min_event_id LONG"
 
-  /** Read the ledger back as a DataFrame (queryable offset table).
-    * A fresh/empty ledger yields an empty frame (not path-not-found);
-    * a malformed marker (impossible once written via ATOMIC_MOVE, but
-    * possible from foreign writers) parses to all-null in PERMISSIVE
-    * mode and is dropped rather than surfacing as a phantom epoch. */
-  def read(spark: SparkSession, ledgerDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
+  /** The ledger's `epoch_*.json` marker files, sorted by name. */
+  private def markerFiles(ledgerDir: String): Seq[Path] = {
     val dir = Paths.get(ledgerDir)
-    val hasMarkers = Files.isDirectory(dir) && {
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
       val it = Files.list(dir)
-      try it.iterator().asScala.exists { p =>
+      try it.iterator().asScala.filter { p =>
         val n = p.getFileName.toString
         n.startsWith("epoch_") && n.endsWith(".json")
-      } finally it.close()
+      }.toSeq.sorted
+      finally it.close()
     }
-    if (!hasMarkers)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(LedgerSchema))
-    else
-      spark.read.schema(LedgerSchema)
-        .json(s"$ledgerDir/epoch_*.json")
-        .filter(col("epoch_id").isNotNull)
   }
 
-  /** Highest committed epoch, or None for a fresh ledger. */
-  def lastCommittedEpoch(ledgerDir: String): Option[Long] = {
-    val dir = Paths.get(ledgerDir)
-    if (!Files.isDirectory(dir)) return None
-    val it = Files.list(dir)
-    try {
-      val epochs = it.iterator()
-      var best = Option.empty[Long]
-      epochs.forEachRemaining { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("epoch_") && name.endsWith(".json")) {
-          // foreign files read() tolerates (epoch_summary.json) must
-          // not crash the resume audit either — skip non-numeric names
-          // the same way read() drops their content (r12 review)
-          name.stripPrefix("epoch_").stripSuffix(".json").toLongOption
-            .foreach(e => if (best.forall(_ < e)) best = Some(e))
-        }
-      }
-      best
-    } finally it.close()
+  /** Read the ledger back as a DataFrame (queryable offset table).
+    * The markers are listed and read with `java.nio` on the driver and
+    * their lines parsed by Spark's JSON reader, as a line-per-record JSON
+    * file read of them would be. A fresh/empty ledger yields an empty
+    * frame (not path-not-found); a malformed marker (impossible once
+    * written via ATOMIC_MOVE, but possible from foreign writers) parses
+    * to all-null in PERMISSIVE mode and is dropped rather than surfacing
+    * as a phantom epoch. */
+  def read(spark: SparkSession, ledgerDir: String): DataFrame = {
+    // lenient decoding: a foreign marker's bad bytes reach the parser
+    // as replacement characters instead of failing the read
+    val lines = markerFiles(ledgerDir)
+      .flatMap(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8).lines().iterator().asScala)
+    spark.read.schema(LedgerSchema)
+      .json(spark.createDataset(lines)(Encoders.STRING))
+      .filter(col("epoch_id").isNotNull)
   }
+
+  /** Highest committed epoch, or None for a fresh ledger. Foreign files
+    * [[read]] tolerates (epoch_summary.json) are skipped here by name,
+    * the way read() drops their content. */
+  def lastCommittedEpoch(ledgerDir: String): Option[Long] =
+    markerFiles(ledgerDir)
+      .flatMap(_.getFileName.toString.stripPrefix("epoch_").stripSuffix(".json").toLongOption)
+      .maxOption
 }
 
 /** Kafka source wiring (SURVEY §2.9 s_source_kafka) — design-complete,
